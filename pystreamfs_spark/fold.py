@@ -1,34 +1,46 @@
 """Per-entity ordered stateful fold — the engine's one custom operator.
 
-The reference threads one global weight vector through a strictly-ordered
-window loop (/root/reference/pystreamfs/pystreamfs.py:59-69). The engine's
-state scope is the entity (``conv_id``): parallel across conversations,
-strictly ordered within one — the faithful transcript semantics AND the
-scalability unlock (SURVEY.md §7).
+The reference threads one weight vector through a strictly ordered window
+loop: update, then top-m, then evaluate (reference pystreamfs.py:59-69). The
+engine's state scope is the entity (``conv_id``): parallel across
+conversations, strictly ordered within one — the faithful transcript
+semantics AND the scalability unlock (SURVEY.md §7).
 
-Two physical strategies, identical results:
+:class:`WindowLoop` is that loop, written once. It owns the kernel state, the
+window id, the partial-window carry and the prequential prefix buffer. Rows
+go in through :meth:`WindowLoop.feed`, split at any points; the windows it
+emits come out as one Arrow batch. Three physical strategies drive it, with
+identical results:
 
-- :func:`fold_weights` — ``groupBy(conv_id).applyInPandas``: one Arrow call
-  per conversation. Simple; materializes a whole conversation per call.
-- :func:`fold_weights_stream` — ``repartitionByRange(conv_id) +
-  sortWithinPartitions + mapInPandas``: a partition-local streaming scan that
-  carries kernel state across Arrow batches. Memory is O(arrow batch +
-  kernel state + current window), not O(conversation) — this is the 100 TB
-  path (a 10⁹-turn conversation streams through one task without
-  materializing).
+- :func:`fold_weights` — ``groupBy(conv_id).applyInArrow``: one
+  ``feed(final=True)`` per conversation. Simple; materializes a whole
+  conversation per call.
+- :func:`fold_weights_stream` — ``repartition(conv_id) +
+  sortWithinPartitions + mapInArrow``: a partition-local scan that feeds
+  each entity segment of each Arrow batch and closes the entity at its
+  boundary. Memory is O(arrow batch + kernel state + current window), not
+  O(conversation) — a 10⁹-turn conversation streams through one task.
+- ``streaming.stream_fold`` — ``applyInPandasWithState``: one
+  ``feed(final=False)`` per micro-batch, with the loop's kernel state, carry
+  and window id kept in GroupState.
 
-Both do exactly one shuffle (hash vs range partition on conv_id); everything
-upstream (featurization) and downstream (stability, joins) stays in
-whole-stage codegen.
+The FSDS re-fold (``fsds_merge.fold_fsds_fast``) is the fourth caller: its
+loop starts from a merged prefix sketch and the chunk's first window id.
+
+The grouped and scan strategies do exactly one shuffle (hash partition on
+conv_id); everything upstream (featurization) and downstream (stability,
+joins) stays in whole-stage codegen.
 """
 
 from __future__ import annotations
 
+import resource
 import time
 from typing import Any, Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pa_compute
 from pyspark.sql import DataFrame
 
 from pyspark.sql.types import (
@@ -42,27 +54,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from pystreamfs_spark.classify import prequential_accuracy
+from pystreamfs_spark.classify import knn_accuracy
 from pystreamfs_spark.kernels import KERNELS, init_state, select_top_m, update
-
-try:  # optional: per-worker USS memory metric (reference pystreamfs.py:74)
-    import psutil  # type: ignore
-
-    def _mem_bytes() -> int:
-        return psutil.Process().memory_full_info().uss
-
-except Exception:  # pragma: no cover - psutil absent in target env
-
-    def _mem_bytes() -> int:
-        return -1
-
-
-def _rows_to_pdf(rows: list[tuple]) -> pd.DataFrame:
-    out = pd.DataFrame(rows, columns=[f.name for f in WEIGHTS_SCHEMA.fields])
-    # np.datetime64 scalars in an object column confuse Arrow; normalize
-    out["ts_end"] = pd.to_datetime(out["ts_end"])
-    return out
-
 
 WEIGHTS_SCHEMA = StructType(
     [
@@ -74,55 +67,200 @@ WEIGHTS_SCHEMA = StructType(
         StructField("selected", ArrayType(IntegerType())),
         StructField("acc", DoubleType()),
         StructField("train_rows", LongType()),
+        # kernel time of the window: update + top-m, not the evaluation
         StructField("elapsed_sec", DoubleType()),
+        # the worker process's peak RSS (getrusage ru_maxrss) when the output
+        # batch was built — not the reference's USS (pystreamfs.py:74)
         StructField("mem_bytes", LongType()),
     ]
 )
 
+_TS_NULL = -(2**63)  # int64 min == Arrow NaT
+_NO_ROWS = (np.empty((0, 0)), np.empty(0), np.empty(0, dtype=np.int64))
 
-def _fold_one_conv(
-    conv_id: str,
-    X: np.ndarray,
-    y: np.ndarray,
-    ts: np.ndarray,
-    kernel: str,
-    batch_size: int,
-    num_features: int,
-    kernel_kwargs: dict[str, Any],
-    with_accuracy: bool,
-    max_train_rows: int | None,
-) -> list[tuple]:
-    """Run the window loop for one fully-materialized conversation."""
-    m = X.shape[1]
-    state = init_state(kernel, m, num_features=num_features, **kernel_kwargs)
-    out: list[tuple] = []
-    n = X.shape[0]
-    for wid, start in enumerate(range(0, n, batch_size)):
-        stop = min(start + batch_size, n)
+
+def _width_error(name: str, a: int, b: int) -> ValueError:
+    return ValueError(
+        f"fold: column {name!r} holds rows of {a} and {b} values; "
+        "every row of an entity needs the same number of features"
+    )
+
+
+def feature_matrix(col: pa.Array | pa.ChunkedArray, name: str) -> np.ndarray:
+    """Arrow ``list<double>`` column → (rows, m) float64 matrix. Every row
+    must be non-null and hold the same number of values; the offsets are
+    checked once here, so every fold driver rejects malformed input alike."""
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    if col.null_count:
+        raise ValueError(f"fold: column {name!r} has {col.null_count} null row(s); every row needs a feature vector")
+    offs = col.offsets.to_numpy(zero_copy_only=False)
+    widths = np.diff(offs)
+    m = int(widths[0]) if len(widths) else 0
+    bad = np.flatnonzero(widths != m)
+    if len(bad):
+        raise _width_error(name, m, int(widths[bad[0]]))
+    vals = col.values.to_numpy(zero_copy_only=False)[offs[0] : offs[-1]]
+    return vals.astype(np.float64, copy=False).reshape(len(col), m)
+
+
+def _arrow_rows(data: pa.RecordBatch | pa.Table, features_col: str, label_col: str, ts_col: str):
+    """(X, y, ts) of an Arrow batch or table; ts as int64 µs, nulls → _TS_NULL."""
+    X = feature_matrix(data.column(features_col), features_col)
+    y = data.column(label_col).to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
+    ts = data.column(ts_col).cast(pa.int64())
+    if ts.null_count:
+        ts = ts.fill_null(_TS_NULL)
+    return X, y, ts.to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
+
+
+class _Prefix:
+    """The entity's rows that completed a window — the prequential training
+    set, capped to the most recent ``cap`` rows (None: all of them). Rows are
+    appended into amortized-doubling storage, so no window copies the whole
+    prefix; the capped case drops its stale head when it reallocates."""
+
+    def __init__(self, cap: int | None):
+        self.cap = cap
+        self.X: np.ndarray | None = None
+        self.y: np.ndarray | None = None
+        self.lo = self.hi = 0  # the training rows are X[lo:hi]
+        self.seen = 0  # all rows appended, cap or not
+
+    def accuracy(self, Xw: np.ndarray, yw: np.ndarray, sel: np.ndarray) -> tuple[float, int]:
+        """k-NN accuracy of window (Xw, yw) on the selected features, trained
+        on the strict prefix; then the window joins the prefix."""
+        x_test = Xw[:, sel]
+        if self.seen == 0:  # t=0 quirk: train = test (reference utils.py:39-42)
+            out = knn_accuracy(x_test, yw, x_test, yw), len(Xw)
+        else:
+            x_train = self.X[self.lo : self.hi][:, sel]
+            out = knn_accuracy(x_train, self.y[self.lo : self.hi], x_test, yw), self.seen
+        self._append(Xw, yw)
+        return out
+
+    def _append(self, Xw: np.ndarray, yw: np.ndarray) -> None:
+        k = len(Xw)
+        if self.X is None or self.hi + k > len(self.X):
+            live = self.hi - self.lo
+            size = max(64, 2 * (live + k))
+            X, y = np.empty((size, Xw.shape[1])), np.empty(size)
+            if live:
+                X[:live], y[:live] = self.X[self.lo : self.hi], self.y[self.lo : self.hi]
+            self.X, self.y, self.lo, self.hi = X, y, 0, live
+        self.X[self.hi : self.hi + k], self.y[self.hi : self.hi + k] = Xw, yw
+        self.hi += k
+        self.seen += k
+        if self.cap is not None:
+            self.lo = max(self.lo, self.hi - self.cap)
+
+
+class WindowLoop:
+    """The strictly ordered window loop of one entity at a time.
+
+    :meth:`start` begins an entity (fresh, or resumed from a saved kernel
+    state, window id and carry). :meth:`feed` takes the entity's next rows
+    in order and runs every complete window of ``batch_size`` rows:
+    ``update`` → ``select_top_m`` → optional prequential k-NN accuracy →
+    emit. A short tail stays in ``carry`` for the next feed unless
+    ``final=True`` closes the entity, when it becomes the last, partial
+    window. Any split of an entity's rows into feeds emits the same windows.
+    :meth:`batch` hands the windows emitted so far over as one
+    ``WEIGHTS_SCHEMA`` Arrow batch."""
+
+    def __init__(
+        self,
+        kernel: str,
+        batch_size: int,
+        num_features: int,
+        kernel_kwargs: dict[str, Any],
+        features_col: str = "features",
+        with_accuracy: bool = False,
+        max_train_rows: int | None = None,
+    ):
+        self.kernel, self.batch_size, self.num_features = kernel, batch_size, num_features
+        self.kernel_kwargs, self.features_col = kernel_kwargs, features_col
+        self.with_accuracy, self.max_train_rows = with_accuracy, max_train_rows
+        self.ts_type = pa.timestamp("us", tz="UTC")  # drivers set the input's type
+        self.windows: list[tuple] = []
+        self.start(None)
+
+    def start(self, entity: Any, state: Any = None, wid: int = 0, carry: tuple | None = None) -> None:
+        """Begin ``entity``; ``state``, ``wid`` and ``carry`` = (X, y) resume
+        a saved loop (carried rows have no timestamp)."""
+        self.entity, self.state, self.wid = entity, state, wid
+        self.carry, self.m = None, None
+        if carry is not None and len(carry[0]):
+            self.carry = (carry[0], carry[1], np.full(len(carry[0]), _TS_NULL, dtype=np.int64))
+            self.m = carry[0].shape[1]
+        self.prefix = _Prefix(self.max_train_rows) if self.with_accuracy else None
+
+    def feed(self, X: np.ndarray, y: np.ndarray, ts: np.ndarray | None, final: bool) -> None:
+        """Fold the entity's next rows (``ts`` None: no timestamps)."""
+        if len(X):
+            if self.m is None:
+                self.m = X.shape[1]
+            elif X.shape[1] != self.m:
+                raise _width_error(self.features_col, self.m, X.shape[1])
+        if ts is None:
+            ts = np.full(len(X), _TS_NULL, dtype=np.int64)
+        if self.carry is not None:
+            if len(X):
+                X, y, ts = (np.concatenate([c, v]) for c, v in zip(self.carry, (X, y, ts)))
+            else:
+                X, y, ts = self.carry
+            self.carry = None
+        n = len(X)
+        if n and self.state is None:
+            self.state = init_state(self.kernel, X.shape[1], num_features=self.num_features, **self.kernel_kwargs)
+        start, bs = 0, self.batch_size
+        while n - start >= bs or (final and start < n):
+            stop = min(start + bs, n)
+            self._step(X[start:stop], y[start:stop], int(ts[stop - 1]))
+            start = stop
+        if start < n:
+            self.carry = (X[start:].copy(), y[start:].copy(), ts[start:].copy())
+
+    def _step(self, Xw: np.ndarray, yw: np.ndarray, ts_end: int) -> None:
         t0 = time.perf_counter()
-        state, w = update(kernel, state, X[start:stop], y[start:stop])
-        selected = select_top_m(w, num_features)
+        self.state, w = update(self.kernel, self.state, Xw, yw)
+        sel = select_top_m(w, self.num_features)
         elapsed = time.perf_counter() - t0
-        acc = None
-        train_rows = 0
-        if with_accuracy:
-            acc = prequential_accuracy(X, y, start, stop, selected, max_train_rows=max_train_rows)
-            train_rows = stop - start if start == 0 else start
-        out.append(
-            (
-                conv_id,
-                wid,
-                stop - start,
-                ts[stop - 1],
-                w.tolist(),
-                [int(j) for j in selected],
-                acc,
-                train_rows,
-                elapsed,
-                _mem_bytes(),
-            )
+        acc, train_rows = self.prefix.accuracy(Xw, yw, sel) if self.prefix is not None else (None, 0)
+        self.windows.append((self.entity, self.wid, len(Xw), ts_end, w, sel, acc, train_rows, elapsed))
+        self.wid += 1
+
+    def batch(self) -> pa.RecordBatch:
+        """The windows emitted since the last call, as one Arrow batch."""
+        k = len(self.windows)
+        conv, wid, rows, ts, w, sel, acc, train, elapsed = (
+            zip(*self.windows) if k else ([] for _ in range(9))
         )
-    return out
+        self.windows = []
+        # list offsets from the ACTUAL lengths: a selection holds
+        # min(num_features, m) entries and m may differ across entities
+        w_off = np.zeros(k + 1, dtype=np.int32)
+        np.cumsum([len(v) for v in w], out=w_off[1:])
+        sel_off = np.zeros(k + 1, dtype=np.int32)
+        np.cumsum([len(v) for v in sel], out=sel_off[1:])
+        w_flat = np.concatenate(w) if k else np.empty(0)
+        sel_flat = np.concatenate(sel).astype(np.int32) if k else np.empty(0, np.int32)
+        mem = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss * 1024  # kB on Linux
+        return pa.RecordBatch.from_arrays(
+            [
+                pa.array(conv).cast(pa.string()),  # non-string entity ids as text
+                pa.array(wid, type=pa.int64()),
+                pa.array(rows, type=pa.int64()),
+                pa.array([None if v == _TS_NULL else v for v in ts], type=pa.int64()).cast(self.ts_type),
+                pa.ListArray.from_arrays(pa.array(w_off), pa.array(w_flat, type=pa.float64())),
+                pa.ListArray.from_arrays(pa.array(sel_off), pa.array(sel_flat, type=pa.int32())),
+                pa.array(acc, type=pa.float64()),
+                pa.array(train, type=pa.int64()),
+                pa.array(elapsed, type=pa.float64()),
+                pa.array(np.full(k, mem, dtype=np.int64)),
+            ],
+            names=[f.name for f in WEIGHTS_SCHEMA.fields],
+        )
 
 
 def fold_weights(
@@ -139,109 +277,31 @@ def fold_weights(
     label_col: str = "label",
     ts_col: str = "ts",
 ) -> DataFrame:
-    """Grouped-map fold: one applyInPandas call per conversation.
+    """Grouped-map fold: one applyInArrow call per conversation.
 
     Input must have (entity_col, *order_cols, features array<double>,
     label double, ts timestamp). Output: one row per (conv_id, window_id)
     with the post-window weight vector, top-m selection and metrics.
+    ``with_accuracy`` trains on the whole strict prefix, or on its most
+    recent ``max_train_rows`` rows when that is set.
     """
     if kernel not in KERNELS:
         raise ValueError(f"unknown kernel {kernel!r}; available: {sorted(KERNELS)}")
     kk = dict(kernel_kwargs or {})
     order = list(order_cols)
 
-    def fold_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order, kind="mergesort")
-        X = np.stack(pdf[features_col].to_numpy()).astype(np.float64, copy=False)
-        y = pdf[label_col].to_numpy(dtype=np.float64)
-        ts = pdf[ts_col].to_numpy()
-        rows = _fold_one_conv(
-            str(pdf[entity_col].iloc[0]),
-            X,
-            y,
-            ts,
-            kernel,
-            batch_size,
-            num_features,
-            kk,
-            with_accuracy,
-            max_train_rows,
-        )
-        return _rows_to_pdf(rows)
+    def fold_fn(tbl: pa.Table) -> pa.Table:
+        tbl = tbl.sort_by([(c, "ascending") for c in order])
+        loop = WindowLoop(kernel, batch_size, num_features, kk, features_col, with_accuracy, max_train_rows)
+        loop.ts_type = tbl.schema.field(ts_col).type
+        loop.start(tbl.column(entity_col)[0].as_py())
+        loop.feed(*_arrow_rows(tbl, features_col, label_col, ts_col), final=True)
+        return pa.Table.from_batches([loop.batch()])
 
     cols = [entity_col, *order, features_col, label_col]
     if ts_col not in cols:
         cols.append(ts_col)
-    return df.select(*dict.fromkeys(cols)).groupBy(entity_col).applyInPandas(fold_fn, WEIGHTS_SCHEMA)
-
-
-STATELESS_KERNELS = {"cancelout"}  # state is rebuilt every window (reference cancelout.py:165-194)
-
-
-def fold_weights_windowed(
-    df: DataFrame,
-    kernel: str = "cancelout",
-    batch_size: int = 50,
-    num_features: int = 5,
-    kernel_kwargs: dict[str, Any] | None = None,
-    entity_col: str = "conv_id",
-    order_cols: tuple[str, ...] = ("turn_idx", "ts"),
-    features_col: str = "features",
-    label_col: str = "label",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Window-parallel fold for STATELESS kernels (no cross-window state):
-    assign window ids declaratively, then run the kernel once per
-    (entity, window) group. Unlike the sequential folds, a giant
-    conversation parallelizes across its own windows. Results are
-    bit-identical to the sequential folds for these kernels.
-
-    Trade-off (measured): this path pays a full shuffle on
-    (entity, window) plus one Arrow round-trip per window, so it only wins
-    when per-window kernel compute dominates per-row data movement — e.g.
-    large batch_size × many training epochs, or a single entity holding
-    most of the data AND an expensive kernel. For CancelOut at the default
-    20 epochs / batch 50 the sequential scan is as fast or faster; prefer
-    this path for heavy window workloads (wide nets, hundreds of epochs)."""
-    if kernel not in KERNELS:
-        raise ValueError(f"unknown kernel {kernel!r}; available: {sorted(KERNELS)}")
-    if kernel not in STATELESS_KERNELS:
-        raise ValueError(
-            f"kernel {kernel!r} carries cross-window state; "
-            f"window-parallel folding is only valid for {sorted(STATELESS_KERNELS)}"
-        )
-    from pystreamfs_spark.operators.windows import assign_count_windows
-
-    kk = dict(kernel_kwargs or {})
-    order = list(order_cols)
-    cols = list(dict.fromkeys([entity_col, *order, features_col, label_col, ts_col]))
-    win = assign_count_windows(
-        df.select(*cols), entity_col=entity_col, order_cols=order_cols, batch_size=batch_size
-    )
-
-    def one_window(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order, kind="mergesort")
-        X = np.stack(pdf[features_col].to_numpy()).astype(np.float64, copy=False)
-        y = pdf[label_col].to_numpy(dtype=np.float64)
-        state = init_state(kernel, X.shape[1], num_features=num_features, **kk)
-        t0 = time.perf_counter()
-        _, w = update(kernel, state, X, y)
-        selected = select_top_m(w, num_features)
-        row = (
-            str(pdf[entity_col].iloc[0]),
-            int(pdf["window_id"].iloc[0]),
-            len(pdf),
-            pdf[ts_col].iloc[-1],
-            w.tolist(),
-            [int(j) for j in selected],
-            None,
-            0,
-            time.perf_counter() - t0,
-            _mem_bytes(),
-        )
-        return _rows_to_pdf([row])
-
-    return win.groupBy(entity_col, "window_id").applyInPandas(one_window, WEIGHTS_SCHEMA)
+    return df.select(*dict.fromkeys(cols)).groupBy(entity_col).applyInArrow(fold_fn, WEIGHTS_SCHEMA)
 
 
 def fold_weights_stream(
@@ -262,9 +322,9 @@ def fold_weights_stream(
     materialize: bool = True,
 ) -> DataFrame:
     """Partition-streaming fold: hash-partition by entity, sort within
-    partitions, then scan Arrow batches carrying kernel state across batch
-    and conversation boundaries. Bounded memory per task regardless of
-    conversation length.
+    partitions, then scan Arrow batches carrying the window loop across
+    batch boundaries. Bounded memory per task regardless of conversation
+    length.
 
     ``materialize`` (default True) lazily ``localCheckpoint``s the weights
     output so multi-consumer pipelines (FSCR ⋈ Nogueira) execute the fold
@@ -273,10 +333,8 @@ def fold_weights_stream(
 
     ``with_accuracy=True`` adds prequential evaluation with a BOUNDED prefix:
     ``max_train_rows`` is required and caps the per-entity training buffer to
-    its most recent rows (memory stays O(max_train_rows·m + batch)). Within
-    that cap the semantics equal :func:`fold_weights`'s (strict prefix, t=0
-    train==test quirk); entities longer than the cap train on the capped
-    suffix — the same documented deviation as ``fold_weights(max_train_rows=)``.
+    its most recent rows (memory stays O(max_train_rows·m + batch)). The
+    results equal ``fold_weights(with_accuracy=True, max_train_rows=...)``.
     Use :func:`fold_weights` when the faithful unbounded prefix is required.
 
     ``assume_partitioned=True`` skips the repartition+sort when the caller
@@ -297,175 +355,33 @@ def fold_weights_stream(
     order = list(order_cols)
     cols = list(dict.fromkeys([entity_col, *order, features_col, label_col, ts_col]))
 
-    _TS_NULL = -(2**63)  # int64 min == Arrow NaT
-
-    def scan(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
-        import pyarrow as pa
-        import pyarrow.compute as pa_compute
-
-        out_type_w = pa.list_(pa.float64())
-        out_type_sel = pa.list_(pa.int32())
-        ts_type = None  # set from the first input batch (preserves Spark's tz)
-
-        cur_conv = None
-        state: Any = None
-        wid = 0
-        carry_X: np.ndarray | None = None
-        carry_y: np.ndarray | None = None
-        carry_last_ts = 0
-        m_holder = [0]
-        # bounded prequential buffer (with_accuracy): the most recent
-        # max_train_rows rows of the current entity that have completed a
-        # window — the capped strict prefix
-        buf_X: np.ndarray | None = None
-        buf_y: np.ndarray | None = None
-        rows_seen = 0
-
-        # per-output-batch accumulators (plain python lists → arrow arrays)
-        o_conv: list = []
-        o_wid: list[int] = []
-        o_rows: list[int] = []
-        o_ts: list[int] = []
-        o_w: list[np.ndarray] = []
-        o_sel: list[np.ndarray] = []
-        o_acc: list = []
-        o_train: list[int] = []
-        o_elapsed: list[float] = []
-
-        def run_windows(X, y, ts, final):
-            nonlocal state, wid, carry_X, carry_y, carry_last_ts
-            nonlocal buf_X, buf_y, rows_seen
-            if carry_X is not None and len(carry_X):
-                X = np.concatenate([carry_X, X]) if len(X) else carry_X
-                y = np.concatenate([carry_y, y]) if len(y) else carry_y
-                ts = np.concatenate([np.full(len(carry_X), carry_last_ts, dtype=np.int64), ts])
-                carry_X = carry_y = None
-            n = len(X)
-            start = 0
-            while n - start >= batch_size or (final and start < n):
-                stop = min(start + batch_size, n)
-                t0 = time.perf_counter()
-                state, w = update(kernel, state, X[start:stop], y[start:stop])
-                selected = select_top_m(w, num_features)
-                acc = None
-                trows = 0
-                if with_accuracy:
-                    from pystreamfs_spark.classify import knn_accuracy
-
-                    x_test = X[start:stop][:, selected]
-                    y_test = y[start:stop]
-                    if rows_seen == 0:  # t=0 quirk: train = test (utils.py:39-42)
-                        acc = knn_accuracy(x_test, y_test, x_test, y_test)
-                        trows = stop - start
-                    else:
-                        acc = knn_accuracy(buf_X[:, selected], buf_y, x_test, y_test)
-                        trows = rows_seen  # full-prefix count, like fold_weights
-                    win_X, win_y = X[start:stop], y[start:stop]
-                    buf_X = win_X if buf_X is None else np.concatenate([buf_X, win_X])
-                    buf_y = win_y if buf_y is None else np.concatenate([buf_y, win_y])
-                    if len(buf_X) > max_train_rows:
-                        buf_X = buf_X[-max_train_rows:].copy()
-                        buf_y = buf_y[-max_train_rows:].copy()
-                    rows_seen += stop - start
-                o_conv.append(cur_conv)
-                o_wid.append(wid)
-                o_rows.append(stop - start)
-                o_ts.append(int(ts[stop - 1]))
-                o_w.append(w)
-                o_sel.append(selected)
-                o_acc.append(acc)
-                o_train.append(trows)
-                o_elapsed.append(time.perf_counter() - t0)
-                wid += 1
-                start = stop
-            if start < n:
-                carry_X, carry_y = X[start:].copy(), y[start:].copy()
-                carry_last_ts = int(ts[-1])
-
-        def flush_output() -> "pa.RecordBatch":
-            nonlocal o_conv, o_wid, o_rows, o_ts, o_w, o_sel, o_acc, o_train, o_elapsed
-            k = len(o_conv)
-            w_flat = np.concatenate(o_w) if o_w else np.empty(0)
-            sel_flat = np.concatenate(o_sel).astype(np.int32) if o_sel else np.empty(0, np.int32)
-            # offsets from ACTUAL lengths (a selection is min(num_features, m)
-            # entries; m may differ across entities in exotic inputs)
-            w_off = np.zeros(k + 1, dtype=np.int32)
-            np.cumsum([len(v) for v in o_w], out=w_off[1:])
-            sel_off = np.zeros(k + 1, dtype=np.int32)
-            np.cumsum([len(v) for v in o_sel], out=sel_off[1:])
-            mem = _mem_bytes()
-            batch = pa.RecordBatch.from_arrays(
-                [
-                    pa.array(o_conv, type=pa.string()),
-                    pa.array(o_wid, type=pa.int64()),
-                    pa.array(o_rows, type=pa.int64()),
-                    pa.array(
-                        [None if v == _TS_NULL else v for v in o_ts], type=pa.int64()
-                    ).cast(ts_type),
-                    pa.ListArray.from_arrays(pa.array(w_off), pa.array(w_flat, type=pa.float64()), type=out_type_w),
-                    pa.ListArray.from_arrays(pa.array(sel_off), pa.array(sel_flat, type=pa.int32()), type=out_type_sel),
-                    pa.array(o_acc, type=pa.float64()),
-                    pa.array(o_train, type=pa.int64()),
-                    pa.array(o_elapsed, type=pa.float64()),
-                    pa.array(np.full(k, mem, dtype=np.int64)),
-                ],
-                names=[f.name for f in WEIGHTS_SCHEMA.fields],
-            )
-            o_conv, o_wid, o_rows, o_ts, o_w, o_sel, o_elapsed = [], [], [], [], [], [], []
-            o_acc, o_train = [], []
-            return batch
-
-        idx = None
+    def scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        loop = WindowLoop(kernel, batch_size, num_features, kk, features_col, with_accuracy, max_train_rows)
         for rb in batches:
             if rb.num_rows == 0:
                 continue
-            if idx is None:
-                names = rb.schema.names
-                idx = {c: names.index(c) for c in (entity_col, features_col, label_col, ts_col)}
-                ts_type = rb.schema.field(idx[ts_col]).type
+            loop.ts_type = rb.schema.field(ts_col).type
+            X, y, ts = _arrow_rows(rb, features_col, label_col, ts_col)
             # entity boundaries computed IN Arrow (pc.not_equal on shifted
             # slices): a to_numpy on a string column materializes one Python
             # object per row — measured ~15% of the whole scan; only one
             # .as_py() per contiguous entity segment is needed instead
-            conv_col = rb.column(idx[entity_col])
-            feats = rb.column(idx[features_col])
-            vals = feats.values.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
-            offs = feats.offsets.to_numpy(zero_copy_only=False)
-            m = int(offs[1] - offs[0])
-            m_holder[0] = m
-            Xb = vals[offs[0] : offs[-1]].reshape(rb.num_rows, m)
-            yb = rb.column(idx[label_col]).to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
-            ts_arrow = rb.column(idx[ts_col]).cast(pa.int64())
-            if ts_arrow.null_count:
-                # null timestamps → int64 min sentinel; emitted back as null
-                ts_arrow = ts_arrow.fill_null(_TS_NULL)
-            tsb = ts_arrow.to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-
+            conv_col = rb.column(entity_col)
+            bounds = [0, rb.num_rows]
             if rb.num_rows > 1:
-                neq = pa_compute.not_equal(
-                    conv_col.slice(1), conv_col.slice(0, rb.num_rows - 1)
-                )
-                bounds = np.flatnonzero(neq.to_numpy(zero_copy_only=False)) + 1
-            else:
-                bounds = np.empty(0, dtype=np.int64)
-            segs = np.split(np.arange(rb.num_rows), bounds)
-            for seg in segs:
-                conv = conv_col[seg[0]].as_py()
-                if conv != cur_conv:
-                    if cur_conv is not None and carry_X is not None:
-                        run_windows(np.empty((0, m)), np.empty(0), np.empty(0, dtype=np.int64), final=True)
-                    cur_conv = conv
-                    state = init_state(kernel, m, num_features=num_features, **kk)
-                    wid = 0
-                    buf_X = buf_y = None
-                    rows_seen = 0
-                run_windows(Xb[seg[0] : seg[-1] + 1], yb[seg[0] : seg[-1] + 1], tsb[seg[0] : seg[-1] + 1], final=False)
-            if o_conv:
-                yield flush_output()
-        if cur_conv is not None and carry_X is not None:
-            run_windows(np.empty((0, m_holder[0])), np.empty(0), np.empty(0, dtype=np.int64), final=True)
-        if o_conv:
-            yield flush_output()
+                neq = pa_compute.not_equal(conv_col.slice(1), conv_col.slice(0, rb.num_rows - 1))
+                bounds[1:1] = (np.flatnonzero(neq.to_numpy(zero_copy_only=False)) + 1).tolist()
+            for lo, hi in zip(bounds, bounds[1:]):
+                conv = conv_col[lo].as_py()
+                if conv != loop.entity:
+                    loop.feed(*_NO_ROWS, final=True)  # close the previous entity
+                    loop.start(conv)
+                loop.feed(X[lo:hi], y[lo:hi], ts[lo:hi], final=False)
+            if loop.windows:
+                yield loop.batch()
+        loop.feed(*_NO_ROWS, final=True)
+        if loop.windows:
+            yield loop.batch()
 
     # Hash-partition on the entity (NOT range): no sampling pass, better
     # balance across many entities, and — crucially — the exchange is

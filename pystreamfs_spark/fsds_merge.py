@@ -12,8 +12,9 @@ parallelism INSIDE one giant conversation at the cost of exactness:
       state is m×ℓ matrices, not rows, so this sequential pass is O(chunks)
       tiny SVDs.
   Phase C (parallel over (entity, chunk)):  re-fold each chunk's windows
-      seeded with the merged prefix sketch of all PRIOR chunks → per-window
-      weight vectors at full granularity.
+      through the fold's ``WindowLoop``, seeded with the merged prefix
+      sketch of all PRIOR chunks and the chunk's first window id →
+      per-window weight vectors at full granularity.
 
 Exactness: with a single chunk the prefix is empty and the result is
 bit-identical to the exact fold (tested); with multiple chunks, per-window
@@ -29,6 +30,7 @@ from typing import Any
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -42,8 +44,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from pystreamfs_spark.kernels.base import select_top_m
-from pystreamfs_spark.kernels.fsds import FSDSState, fsds_update
+from pystreamfs_spark.fold import WindowLoop, feature_matrix
+from pystreamfs_spark.kernels.fsds import FSDSState
 from pystreamfs_spark.operators.windows import assign_count_windows
 
 _SKETCH_SCHEMA = StructType(
@@ -73,27 +75,13 @@ _OUT_SCHEMA = StructType(
 )
 
 
-def _sketch_update(B: np.ndarray | None, Yt: np.ndarray, ell: int) -> np.ndarray:
-    """One FD hstack+svd+shrink step WITHOUT the ridge/weights tail — phase A
-    only needs the sketch, and skipping the weights step avoids the
-    reference's s[k−1] indexing on degenerate (few-column) windows."""
-    if B is None or B.size == 0:
-        C = Yt
-    else:
-        C = np.hstack((B, Yt))
-    U, s, _ = np.linalg.svd(C, full_matrices=False)
-    U = U[:, :ell]
-    s = s[:ell]
-    with np.errstate(invalid="ignore"):
-        s = np.sqrt(s**2 - s[-1] ** 2)
-    s = np.nan_to_num(s)
-    return np.dot(U, np.diag(s))
-
-
-def _merge_sketches(B1: np.ndarray | None, B2: np.ndarray, ell: int) -> np.ndarray:
-    """FD merge: treat B2's columns as a batch appended to sketch B1 —
-    the same hstack+svd+shrink step the per-window update performs."""
-    C = B2 if B1 is None or B1.size == 0 else np.hstack((B1, B2))
+def _fd_step(B: np.ndarray | None, C_new: np.ndarray, ell: int) -> np.ndarray:
+    """One Frequent-Directions step: append the columns ``C_new`` to sketch
+    ``B`` (hstack), SVD, keep the top ℓ, shrink. Phase A feeds it a window's
+    transposed rows; phase B feeds it a chunk's sketch (the FD merge). It
+    skips the kernel's ridge/weights tail, which phase A does not need and
+    which indexes s[k−1] on degenerate (few-column) windows."""
+    C = C_new if B is None or B.size == 0 else np.hstack((B, C_new))
     U, s, _ = np.linalg.svd(C, full_matrices=False)
     U = U[:, :ell]
     s = s[:ell]
@@ -136,18 +124,21 @@ def fold_fsds_fast(
     resolved_ell = ell if ell >= 1 else int(np.sqrt(sample_m))
     FSDSState.init(sample_m, k=k, ell=ell)  # surface the ell>=k contract early
 
-    def sketch_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order, kind="mergesort")
-        X = np.stack(pdf[features_col].to_numpy()).astype(np.float64, copy=False)
+    def sketch_chunk(tbl: pa.Table) -> pa.Table:
+        tbl = tbl.sort_by([(c, "ascending") for c in order])
+        X = feature_matrix(tbl.column(features_col), features_col)
         B = None
         for s in range(0, len(X), batch_size):
-            B = _sketch_update(B, X[s : s + batch_size].T, resolved_ell)
-        return pd.DataFrame(
-            [(str(pdf[entity_col].iloc[0]), int(pdf["chunk"].iloc[0]), pickle.dumps(B))],
-            columns=["conv_id", "chunk", "sketch"],
+            B = _fd_step(B, X[s : s + batch_size].T, resolved_ell)
+        return pa.table(
+            {
+                "conv_id": [str(tbl.column(entity_col)[0].as_py())],
+                "chunk": [tbl.column("chunk")[0].as_py()],
+                "sketch": [pickle.dumps(B)],
+            }
         )
 
-    sketches = win.groupBy(entity_col, "chunk").applyInPandas(sketch_chunk, _SKETCH_SCHEMA)
+    sketches = win.groupBy(entity_col, "chunk").applyInArrow(sketch_chunk, _SKETCH_SCHEMA)
 
     def prefix_scan(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("chunk")
@@ -156,7 +147,7 @@ def fold_fsds_fast(
         for _, row in pdf.iterrows():
             out.append((row["conv_id"], int(row["chunk"]), pickle.dumps(prefix)))
             B = pickle.loads(row["sketch"])
-            prefix = _merge_sketches(prefix, B, resolved_ell)
+            prefix = _fd_step(prefix, B, resolved_ell)
         return pd.DataFrame(out, columns=["conv_id", "chunk", "prefix"])
 
     prefixes = sketches.groupBy("conv_id").applyInPandas(prefix_scan, _PREFIX_SCHEMA)
@@ -165,31 +156,16 @@ def fold_fsds_fast(
         F.broadcast(prefixes.withColumnRenamed("conv_id", entity_col)), [entity_col, "chunk"]
     )
 
-    def refold_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order, kind="mergesort")
-        X = np.stack(pdf[features_col].to_numpy()).astype(np.float64, copy=False)
-        wids = pdf["window_id"].to_numpy()
-        prefix = pickle.loads(pdf["prefix"].iloc[0])
+    def refold_chunk(tbl: pa.Table) -> pa.Table:
+        tbl = tbl.sort_by([(c, "ascending") for c in order])
+        X = feature_matrix(tbl.column(features_col), features_col)
         state = FSDSState.init(X.shape[1], k=k, ell=ell)
+        prefix = pickle.loads(tbl.column("prefix")[0].as_py())
         if prefix is not None:
-            state.B = prefix
-            state.ell = resolved_ell
-        out = []
-        start = 0
-        while start < len(X):
-            stop = min(start + batch_size, len(X))
-            state, w = fsds_update(state, X[start:stop])
-            sel = select_top_m(w, num_features)
-            out.append(
-                (
-                    str(pdf[entity_col].iloc[0]),
-                    int(wids[start]),
-                    stop - start,
-                    w.tolist(),
-                    [int(j) for j in sel],
-                )
-            )
-            start = stop
-        return pd.DataFrame(out, columns=[f.name for f in _OUT_SCHEMA.fields])
+            state.B, state.ell = prefix, resolved_ell
+        loop = WindowLoop("fsds", batch_size, num_features, {}, features_col)
+        loop.start(tbl.column(entity_col)[0].as_py(), state, tbl.column("window_id")[0].as_py())
+        loop.feed(X, np.zeros(len(X)), None, final=True)
+        return pa.Table.from_batches([loop.batch().select([f.name for f in _OUT_SCHEMA.fields])])
 
-    return joined.groupBy(entity_col, "chunk").applyInPandas(refold_chunk, _OUT_SCHEMA)
+    return joined.groupBy(entity_col, "chunk").applyInArrow(refold_chunk, _OUT_SCHEMA)

@@ -160,8 +160,9 @@ class _Index:
             self._label = np.empty(cap)
             self.size = 0
         else:
-            # adopt the saved compact arrays; the first add() reallocates
-            # with headroom (one O(K) copy per update call at most)
+            # copy the saved compact arrays into buffers with headroom (one
+            # O(K) copy per update call): refresh()/remove() write in place,
+            # and must not reach arrays a caller's earlier state still holds
             self._keys = state.keys
             self._cent = state.cent
             self._var = state.var
@@ -169,6 +170,7 @@ class _Index:
             self._fpr = state.fpr_arr
             self._label = state.label_arr
             self.size = len(state.keys)
+            self._grow()
 
     # valid-prefix views — what every scan in mcnn_update reads
     @property
@@ -236,12 +238,13 @@ class _Index:
         self.size -= 1
 
     def save(self, state: MCNNState) -> None:
-        state.keys = self._keys[: self.size]
-        state.cent = self._cent[: self.size]
-        state.var = self._var[: self.size]
-        state.avg_t = self._avg_t[: self.size]
-        state.fpr_arr = self._fpr[: self.size]
-        state.label_arr = self._label[: self.size]
+        # compact copies, not views into the slack-capacity buffers
+        state.keys = self.keys.copy()
+        state.cent = self.cent.copy()
+        state.var = self.var.copy()
+        state.avg_t = self.avg_t.copy()
+        state.fpr_arr = self.fpr.copy()
+        state.label_arr = self.label.copy()
 
 
 def _add_instance(c, c_key, x, y, window, dists, idx, clusters):

@@ -5,12 +5,13 @@ pystreamfs.py:59), so bulk/backfill batch execution is the faithful mode
 (SURVEY.md §2.3). This adapter runs the SAME kernels over a live stream:
 
 - :func:`stream_fold` — per-entity ordered kernel fold as a custom stateful
-  operator (``applyInPandasWithState``). State = (pickled kernel state,
-  carried partial-window rows, next window id); identical arithmetic to the
-  batch fold. Exact batch parity holds when rows arrive in turn order
-  (monotone ``turn_idx`` per conversation) — rows older than the fold
-  frontier are counted in ``n_late`` and skipped, mirroring a
-  watermark-dropped late event.
+  operator (``applyInPandasWithState``) that drives the batch fold's
+  ``fold.WindowLoop`` with ``final=False``; GroupState keeps the loop's
+  pickled kernel state, carried partial-window rows and next window id.
+  Exact batch parity holds when rows arrive in turn order (monotone
+  ``turn_idx`` per conversation) — rows older than the fold frontier are
+  counted in ``n_late`` and skipped, mirroring a watermark-dropped late
+  event.
 - :func:`stream_session_stats` — event-time sessionization via
   ``F.session_window`` + watermark (the streaming twin of
   operators.sessionize).
@@ -23,6 +24,7 @@ from typing import Any, Iterable, Iterator, Tuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -37,7 +39,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from pystreamfs_spark.kernels import KERNELS, init_state, select_top_m, update
+from pystreamfs_spark.fold import WindowLoop, feature_matrix
+from pystreamfs_spark.kernels import KERNELS
 
 STREAM_WEIGHTS_SCHEMA = StructType(
     [
@@ -127,7 +130,9 @@ def stream_fold(
     def fn(
         key: Tuple[str], pdfs: Iterable[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        conv_id = key[0]
+        loop = WindowLoop(kernel, batch_size, num_features, kk, features_col)
+        prev_sel = sel_counts = None
+        next_turn = n_late_acc = 0
         if state.exists:
             stored = state.get
             if stored[0] != _STATE_VERSION:
@@ -139,84 +144,57 @@ def stream_fold(
                     "upgrading the engine."
                 )
             _, ks_b, cx_b, cy_b, ps_b, sc_b, next_turn, wid, n_late_acc = stored
-            kstate = pickle.loads(ks_b)
             carry_X = pickle.loads(cx_b)
-            carry_y = pickle.loads(cy_b)
+            carry = None if carry_X is None else (carry_X, pickle.loads(cy_b))
+            loop.start(key[0], pickle.loads(ks_b), wid, carry)
             prev_sel = pickle.loads(ps_b)
             sel_counts = pickle.loads(sc_b)
         else:
-            kstate = None
-            carry_X = None
-            carry_y = None
-            prev_sel = None
-            sel_counts = None
-            next_turn = 0
-            wid = 0
-            n_late_acc = 0
+            loop.start(key[0])
 
         rows = pd.concat(list(pdfs), ignore_index=True)
         rows = rows.sort_values(turn_col, kind="mergesort")
         fresh = rows[rows[turn_col] >= next_turn]
         n_late = n_late_acc + (len(rows) - len(fresh))
-        out = []
         if len(fresh):
-            X = np.stack(fresh[features_col].to_numpy()).astype(np.float64, copy=False)
-            y = fresh[label_col].to_numpy(dtype=np.float64)
-            if kstate is None:
-                kstate = init_state(kernel, X.shape[1], num_features=num_features, **kk)
-            if sel_counts is None:
-                sel_counts = np.zeros(X.shape[1], dtype=np.int64)
-            if carry_X is not None and len(carry_X):
-                X = np.concatenate([carry_X, X])
-                y = np.concatenate([carry_y, y])
+            X = feature_matrix(pa.array(fresh[features_col], type=pa.list_(pa.float64())), features_col)
+            loop.feed(X, fresh[label_col].to_numpy(dtype=np.float64), None, final=False)
             next_turn = int(fresh[turn_col].iloc[-1]) + 1
-            start = 0
-            while len(X) - start >= batch_size:
-                stop = start + batch_size
-                kstate, w = update(kernel, kstate, X[start:stop], y[start:stop])
-                sel = select_top_m(w, num_features)
+        out = None
+        if loop.windows:
+            out = loop.batch().select(["conv_id", "window_id", "win_rows", "w", "selected"]).to_pandas()
+            fscr_vals, stab = [], []
+            for wid, sel in zip(out["window_id"], out["selected"]):
                 # FSCR vs the previous window of this entity, carried in
                 # state across micro-batches (reference utils.py:4-18)
-                fscr_val = (
-                    None
-                    if prev_sel is None
-                    else len(set(prev_sel).difference(set(sel))) / num_features
+                fscr_vals.append(
+                    None if prev_sel is None else len(set(prev_sel).difference(set(sel))) / num_features
                 )
+                if sel_counts is None:
+                    sel_counts = np.zeros(loop.m, dtype=np.int64)
                 sel_counts[sel] += 1
-                stab = _running_nogueira(sel_counts, wid + 1, len(sel))
-                out.append(
-                    (
-                        conv_id,
-                        wid,
-                        batch_size,
-                        w.tolist(),
-                        [int(j) for j in sel],
-                        fscr_val,
-                        stab,
-                        n_late,
-                    )
-                )
+                stab.append(_running_nogueira(sel_counts, wid + 1, len(sel)))
                 prev_sel = [int(j) for j in sel]
-                n_late = 0
-                wid += 1
-                start = stop
-            carry_X, carry_y = X[start:].copy(), y[start:].copy()
+            out["fscr"], out["stability"] = fscr_vals, stab
+            out["n_late"] = [n_late] + [0] * (len(out) - 1)
+            n_late = 0
 
+        carry_X, carry_y = loop.carry[:2] if loop.carry is not None else (None, None)
         state.update(
             (
                 _STATE_VERSION,
-                pickle.dumps(kstate),
+                pickle.dumps(loop.state),
                 pickle.dumps(carry_X),
                 pickle.dumps(carry_y),
                 pickle.dumps(prev_sel),
                 pickle.dumps(sel_counts),
                 next_turn,
-                wid,
+                loop.wid,
                 n_late,  # 0 if a window was emitted this batch; else carried
             )
         )
-        if out:
-            yield pd.DataFrame(out, columns=[f.name for f in STREAM_WEIGHTS_SCHEMA.fields])
+        if out is not None:
+            yield out[[f.name for f in STREAM_WEIGHTS_SCHEMA.fields]]
 
     cols = [entity_col, turn_col, features_col, label_col]
     return (

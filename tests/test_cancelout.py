@@ -37,24 +37,3 @@ def test_cancelout_fold_runs(spark):
     assert out
     assert all(len(r.w) == 16 and len(r.selected) == 5 for r in out)
 
-
-def test_windowed_fold_matches_sequential_for_stateless(spark):
-    import pytest
-
-    from pystreamfs_spark.fold import fold_weights_stream, fold_weights_windowed
-    from pystreamfs_spark.functions.features import featurize_turns
-    from pystreamfs_spark.sources.transcripts import synthesize_transcripts
-
-    f = featurize_turns(synthesize_transcripts(spark, n_convs=4, seed=31)).cache()
-    seq = {
-        (r.conv_id, r.window_id): (r.w, list(r.selected), r.win_rows)
-        for r in fold_weights_stream(f, kernel="cancelout", batch_size=25, num_features=5).collect()
-    }
-    par = {
-        (r.conv_id, r.window_id): (r.w, list(r.selected), r.win_rows)
-        for r in fold_weights_windowed(f, kernel="cancelout", batch_size=25, num_features=5).collect()
-    }
-    assert par == seq  # bit-identical: the kernel rebuilds state per window
-
-    with pytest.raises(ValueError, match="cross-window state"):
-        fold_weights_windowed(f, kernel="ofs")
