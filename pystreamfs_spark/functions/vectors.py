@@ -1,34 +1,16 @@
 """Vector math over array<float/double> columns — JVM-side, no Python in
 the hot path.
 
-Two physical forms, identical values:
+Every function is one higher-order-function fold (``aggregate`` /
+``zip_with``) that works for any array length, with each product cast to
+double first. Spark's HOFs are ``CodegenFallback`` (evaluated interpreted,
+row by row), so pair joins fold each row's norm once before the join and
+pass it to :func:`cosine_with_norms`. A ``dims``-unrolled codegen form
+was removed because no caller used it and it measured no end-to-end win:
+semantic_dedup ran 9.82 s unrolled vs 7.39 s folded, a wash at 250k
+pairs (r06) — re-add an unroll only with a measured win.
 
-- the HOF fold (``aggregate`` / ``zip_with``) works for any array length —
-  but Spark's higher-order functions are ``CodegenFallback``: ANY
-  expression tree containing one is evaluated interpreted, row by row,
-  which costs ~2x on a hot pair join (guide §4.1 — prefer codegen
-  built-ins);
-- the ``dims``-unrolled form expands the same left-to-right fold into a
-  flat ``a[1]*b[1] + a[2]*b[2] + ...`` chain of plain arithmetic —
-  whole-stage-codegen'd end to end. Measured on the sf0.1 embedding pair
-  join (250k pairs x 64 dims): 0.9 s vs 1.8 s for the fold.
-
-The unrolled chain reproduces the fold's float arithmetic EXACTLY: the
-fold computes ``((0.0 + p0) + p1) + ...`` with each product cast to double
-first, and the unrolled expression builds the identical association
-``0.0D + p0 + p1 + ...``, so results are bit-identical (asserted in
-tests). Rows whose actual array length differs from ``dims`` fall back
-per row to the original fold via a guarded CASE WHEN.
-
-CONSTRUCTION COST (measured, and the reason for the string-based API):
-building a 64-term chain through the PySpark Column API costs ~400 py4j
-round trips — 1.5-2.5 s of DRIVER time per expression per query, easily
-dwarfing the executor win at benchmark scale. The unrolled form is
-therefore assembled as ONE SQL string and parsed JVM-side in a single
-``F.expr`` call (~0.1 s warm, plan-identical). That requires the array
-operands to be COLUMN NAMES, so every function here accepts
-``Column | str``: pass the *name* (plus ``dims``) to get the unrolled
-fast path; Column operands (or ``dims=None``) use the HOF fold.
+Operands are ``Column | str`` (a str is a column name).
 """
 
 from __future__ import annotations
@@ -41,85 +23,23 @@ def _c(x: "Column | str") -> Column:
     return F.col(x) if isinstance(x, str) else x
 
 
-def _nm(name: str) -> str:
-    if "`" in name:
-        raise ValueError(f"column name with backtick not supported: {name!r}")
-    return f"`{name}`"
-
-
-def _dot_fold(a: Column, b: Column) -> Column:
+def dot(a: "Column | str", b: "Column | str") -> Column:
     # cast BEFORE multiplying: float32 inputs must not multiply in float32
     return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
+        F.zip_with(_c(a), _c(b), lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
 
 
-def _dot_fold_sql(a: str, b: str) -> str:
-    return (
-        f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * "
-        f"CAST(y AS DOUBLE)), 0.0D, (acc, x) -> acc + x)"
-    )
-
-
-def _dot_sql(a: str, b: str, dims: int) -> str:
-    terms = " + ".join(
-        f"(CAST(try_element_at({a}, {i}) AS DOUBLE) * "
-        f"CAST(try_element_at({b}, {i}) AS DOUBLE))"
-        for i in range(1, dims + 1)
-    )
-    return (
-        f"CASE WHEN size({a}) = {dims} AND size({b}) = {dims} "
-        f"THEN 0.0D + {terms} ELSE {_dot_fold_sql(a, b)} END"
-    )
-
-
-def dot(a: "Column | str", b: "Column | str", dims: int | None = None) -> Column:
-    if dims is not None and isinstance(a, str) and isinstance(b, str):
-        return F.expr(_dot_sql(_nm(a), _nm(b), dims))
-    return _dot_fold(_c(a), _c(b))
-
-
-def _norm_fold(a: Column) -> Column:
+def norm(a: "Column | str") -> Column:
     return F.sqrt(
-        F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double"))
+        F.aggregate(_c(a), F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double"))
     )
 
 
-def _norm_fold_sql(a: str) -> str:
-    return (
-        f"aggregate({a}, 0.0D, (acc, x) -> acc + CAST(x AS DOUBLE) * "
-        f"CAST(x AS DOUBLE))"
-    )
-
-
-def _norm_sql(a: str, dims: int) -> str:
-    terms = " + ".join(
-        f"(CAST(try_element_at({a}, {i}) AS DOUBLE) * "
-        f"CAST(try_element_at({a}, {i}) AS DOUBLE))"
-        for i in range(1, dims + 1)
-    )
-    return (
-        f"SQRT(CASE WHEN size({a}) = {dims} THEN 0.0D + {terms} "
-        f"ELSE {_norm_fold_sql(a)} END)"
-    )
-
-
-def norm(a: "Column | str", dims: int | None = None) -> Column:
-    if dims is not None and isinstance(a, str):
-        return F.expr(_norm_sql(_nm(a), dims))
-    return _norm_fold(_c(a))
-
-
-def cosine(a: "Column | str", b: "Column | str", dims: int | None = None) -> Column:
-    if dims is not None and isinstance(a, str) and isinstance(b, str):
-        an, bn = _nm(a), _nm(b)
-        return F.expr(
-            f"({_dot_sql(an, bn, dims)}) / (({_norm_sql(an, dims)}) * "
-            f"({_norm_sql(bn, dims)}))"
-        )
-    return _dot_fold(_c(a), _c(b)) / (_norm_fold(_c(a)) * _norm_fold(_c(b)))
+def cosine(a: "Column | str", b: "Column | str") -> Column:
+    return dot(a, b) / (norm(a) * norm(b))
 
 
 def cosine_with_norms(
@@ -127,11 +47,10 @@ def cosine_with_norms(
     b: "Column | str",
     na: Column,
     nb: Column,
-    dims: int | None = None,
 ) -> Column:
     """cosine(a, b) with caller-precomputed norms — bit-identical to
     :func:`cosine` (same dot fold, same ``na * nb`` product order), but a
     pair join can fold each row's norm ONCE instead of once per partner:
     3 array folds per pair drop to 1. Pass ``na = norm(a)`` computed on
     the pre-join side."""
-    return dot(a, b, dims) / (na * nb)
+    return dot(a, b) / (na * nb)

@@ -281,23 +281,13 @@ def kmeans_centroids(
     return spark.createDataFrame(cent_rows, "cell int, __cv array<double>")
 
 
-def _sqdist(a, b, dims: int | None = None):
-    """Squared Euclidean distance of two array columns (a cast to double).
-    ``dims`` unrolls the fold into flat codegen arithmetic (bit-identical;
-    rows with a different length fall back to the fold per row — the
-    functions.vectors pattern)."""
-    fold = F.aggregate(
+def _sqdist(a, b):
+    """Squared Euclidean distance of two array columns (a cast to double)."""
+    return F.aggregate(
         F.zip_with(a.cast("array<double>"), b, lambda x, y: (x - y) * (x - y)),
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-    if dims is None:
-        return fold
-    s = F.lit(0.0)
-    for i in range(1, dims + 1):
-        d = F.try_element_at(a, F.lit(i)).cast("double") - F.try_element_at(b, F.lit(i))
-        s = s + d * d
-    return F.when((F.size(a) == dims) & (F.size(b) == dims), s).otherwise(fold)
 
 
 def _ranked_cells_l2(vec_col: str):

@@ -22,6 +22,9 @@ oracle.
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -149,6 +152,47 @@ def minhash_signatures(
     )
 
 
+def _cut_oversized(postings: DataFrame, keys: list[str], cap: int) -> DataFrame:
+    """The cut of every capped pair join: drop postings whose key is NULL
+    (an equi-join never matches NULL, and groupBy would otherwise pool every
+    NULL-keyed posting into one bucket), then ANTI-join the keys held by
+    more than ``cap`` postings. The oversized list is at most
+    n_postings/cap rows and heavy-hitter-sized in practice, so AQE
+    broadcasts it and the cut is a map-only stage; a keep-list INNER join
+    would drag the whole posting list through a sort-merge join (r06,
+    measured), and a degenerate key costs nothing here."""
+    kept = postings.where(reduce(operator.and_, [F.col(k).isNotNull() for k in keys]))
+    bad = (
+        kept.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("__n"))
+        .where(F.col("__n") > cap)
+        .select(*keys)
+    )
+    return kept.join(bad, keys, "left_anti")
+
+
+def _bucket_pairs(postings: DataFrame, keys: list[str], item, cap: int) -> DataFrame:
+    """Enumerate the pairs of ``item`` values sharing a key, over postings
+    already cut by :func:`_cut_oversized`: one ``sort_array(collect_list(
+    item))`` per key, then ``posexplode`` + ``slice`` emit every pair once,
+    first element sorting before the second. Output: (id_a, id_b), once
+    per shared key. Items must be unique within a key.
+
+    The cut bounds every bucket at ``cap`` items and runs BEFORE the
+    collect, so no aggregation buffer ever holds more than ``cap`` values
+    (the dup_spans hot-key-pin lesson), and each bucket of n items yields
+    exactly its C(n,2) pairs with no self-join (r06: minhash_scale
+    17.1 → ~4 s interleaved)."""
+    buckets = postings.groupBy(*keys).agg(F.sort_array(F.collect_list(item)).alias("__m"))
+    # posexplode is 0-based; slice() is 1-based → partners of the element at
+    # index __i start at 1-based position __i + 2. __m is a bound column, so
+    # referencing it from both Generates is O(1) per row (the
+    # Generate-inlining rule applies to expression trees, not columns).
+    return buckets.select(F.posexplode("__m").alias("__i", "id_a"), "__m").select(
+        "id_a", F.explode(F.slice("__m", F.col("__i") + 2, cap)).alias("id_b")
+    )
+
+
 def minhash_lsh_candidates(
     df: DataFrame,
     text_col: str = "text",
@@ -179,44 +223,10 @@ def minhash_lsh_candidates(
         else minhash_signatures(df, text_col, id_col, n_bands, k, band_r, hash_fn)
     )
     if max_bucket_size is not None:
-        # Capped path (r06, measured): the cap bounds every bucket at
-        # max_bucket_size ids, so pairs can be ENUMERATED from a per-bucket
-        # sorted id array instead of joined — replacing two sort-merge
-        # joins over the full posting list (size-filter join + bucket
-        # self-join, ~9 s of the 13 s minhash_scale entry; end to end
-        # 17.1 → ~4 s interleaved). The cut itself inverts to an ANTI-join
-        # against the OVERSIZED buckets: that list is at most
-        # n_postings/cap rows and in practice heavy-hitter-sized, so AQE
-        # broadcasts it and the cut is a map-only stage (the old form
-        # inner-joined against the huge ok-list — a full sort-merge join);
-        # a degenerate bucket costs nothing here and its postings are
-        # dropped before any buffering. Order of operations keeps the
-        # collect bounded: the cut runs BEFORE collect_list, so no
-        # aggregation buffer ever holds more than max_bucket_size ids (the
-        # dup_spans hot-key-pin lesson). Pair multiset is identical to the
-        # join form: each bucket of n ≤ cap sorted unique ids yields
-        # exactly its C(n,2) ordered pairs, once per shared band, and the
-        # final pair-groupBy counts agreeing bands.
-        bad = (
-            sig.groupBy("band", "sig")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .where(F.col("__n") > max_bucket_size)
-            .select("band", "sig")
-        )
-        capped = sig.join(bad, ["band", "sig"], "left_anti")
-        buckets = capped.groupBy("band", "sig").agg(
-            F.sort_array(F.collect_list(F.col(id_col))).alias("__ids")
-        )
-        # posexplode is 0-based; slice() is 1-based → partners of the element
-        # at index __i start at 1-based position __i + 2. __ids is a bound
-        # column, so referencing it from both Generates is O(1) per row (the
-        # Generate-inlining rule applies to expression trees, not columns).
-        pairs = buckets.select(
-            F.posexplode("__ids").alias("__i", "id_a"), F.col("__ids")
-        ).select(
-            "id_a",
-            F.explode(F.slice("__ids", F.col("__i") + 2, max_bucket_size)).alias("id_b"),
-        )
+        # capped: enumerate each (band, sig) bucket (see _bucket_pairs); the
+        # pair multiset equals the join form's, once per shared band
+        capped = _cut_oversized(sig, ["band", "sig"], max_bucket_size)
+        pairs = _bucket_pairs(capped, ["band", "sig"], F.col(id_col), max_bucket_size)
         return pairs.groupBy("id_a", "id_b").agg(
             F.count(F.lit(1)).alias("n_shared_bands")
         )
@@ -227,6 +237,24 @@ def minhash_lsh_candidates(
         .where(F.col("id_a") < F.col("id_b"))
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_shared_bands"))
+    )
+
+
+def _cap_audit(sizes: DataFrame, cap: int | None, unit: str, max_name: str, *extra) -> DataFrame:
+    """One row of cap statistics over a per-key sizes frame (column ``n``):
+    key count, keys dropped, postings dropped, ``est_pairs_dropped`` =
+    Σ n·(n−1)/2 over dropped keys, and the largest key. ``cap=None`` drops
+    nothing."""
+    dropped = (F.col("n") > F.lit(cap)) if cap is not None else F.lit(False)
+    return sizes.agg(
+        F.count(F.lit(1)).alias(f"n_{unit}"),
+        F.sum(dropped.cast("bigint")).alias(f"n_{unit}_dropped"),
+        F.sum(F.when(dropped, F.col("n")).otherwise(F.lit(0))).alias("n_postings_dropped"),
+        F.sum(
+            F.when(dropped, F.col("n") * (F.col("n") - 1) / 2).otherwise(F.lit(0.0))
+        ).cast("bigint").alias("est_pairs_dropped"),
+        F.max("n").alias(max_name),
+        *extra,
     )
 
 
@@ -267,20 +295,8 @@ def minhash_bucket_audit(
         else minhash_signatures(df, text_col, id_col, n_bands, k, band_r, hash_fn)
     )
     sizes = sig.groupBy("band", "sig").agg(F.count(F.lit(1)).alias("n"))
-    cap = F.lit(max_bucket_size) if max_bucket_size is not None else None
-    dropped = (F.col("n") > cap) if cap is not None else F.lit(False)
-    aggs = [
-        F.count(F.lit(1)).alias("n_buckets"),
-        F.sum(dropped.cast("bigint")).alias("n_buckets_dropped"),
-        F.sum(F.when(dropped, F.col("n")).otherwise(F.lit(0))).alias("n_postings_dropped"),
-        F.sum(
-            F.when(dropped, F.col("n") * (F.col("n") - 1) / 2).otherwise(F.lit(0.0))
-        ).cast("bigint").alias("est_pairs_dropped"),
-        F.max("n").alias("max_bucket"),
-    ]
-    if with_skew:
-        aggs.append(F.sum("n").alias("n_postings"))
-    out = sizes.agg(*aggs)
+    extra = [F.sum("n").alias("n_postings")] if with_skew else []
+    out = _cap_audit(sizes, max_bucket_size, "buckets", "max_bucket", *extra)
     if with_skew:
         out = out.withColumn(
             "bucket_skew_factor",
@@ -305,16 +321,29 @@ def stop_shingle_audit(
     dfreq = shingle_table(df, text_col, id_col, k).groupBy("shingle").agg(
         F.count(F.lit(1)).alias("n")
     )
-    cap = F.lit(max_df) if max_df is not None else None
-    dropped = (F.col("n") > cap) if cap is not None else F.lit(False)
-    return dfreq.agg(
-        F.count(F.lit(1)).alias("n_shingles"),
-        F.sum(dropped.cast("bigint")).alias("n_shingles_dropped"),
-        F.sum(F.when(dropped, F.col("n")).otherwise(F.lit(0))).alias("n_postings_dropped"),
-        F.sum(
-            F.when(dropped, F.col("n") * (F.col("n") - 1) / 2).otherwise(F.lit(0.0))
-        ).cast("bigint").alias("est_pairs_dropped"),
-        F.max("n").alias("max_df_seen"),
+    return _cap_audit(dfreq, max_df, "shingles", "max_df_seen")
+
+
+def _jaccard(pairs: DataFrame, threshold: float) -> DataFrame:
+    """(id_a, id_b, __n_a, __n_b), one row per shared shingle →
+    (id_a, id_b, jaccard) at or above ``threshold``. The set sizes are
+    constant within a pair group, so min() just reads them."""
+    return (
+        pairs.groupBy("id_a", "id_b")
+        .agg(
+            F.count(F.lit(1)).alias("n_inter"),
+            F.min("__n_a").alias("n_a"),
+            F.min("__n_b").alias("n_b"),
+        )
+        .select(
+            "id_a",
+            "id_b",
+            (
+                F.col("n_inter").cast("double")
+                / (F.col("n_a") + F.col("n_b") - F.col("n_inter")).cast("double")
+            ).alias("jaccard"),
+        )
+        .where(F.col("jaccard") >= threshold)
     )
 
 
@@ -338,99 +367,38 @@ def ngram_jaccard_pairs(
 
     Plan shape (deliberate): the shingle explode is expensive, so the plan
     is arranged to compute it twice at most instead of once per consumer.
-    With ``max_df`` set (r06, measured): the cut is an ANTI-join against
-    the OVERSIZED shingles — a list of at most n_postings/max_df rows,
-    heavy-hitter-sized in practice, so AQE broadcasts it and the cut is a
-    map-only stage (the pre-r06 form inner-joined the posting list against
-    the huge keep-set — a full sort-merge join). The cut also bounds every
-    surviving shingle's bucket at ``max_df`` docs, so pairs are ENUMERATED
-    from a per-shingle sorted (id, set_size) array instead of
-    self-joined — the same bounded-bucket construction as
-    :func:`minhash_lsh_candidates`'s capped path, with collect buffers
-    bounded because the cut runs first. Interleaved at sf0.1: 1.9 → 1.5 s
-    with an identical pair set. Without ``max_df`` buckets are unbounded,
-    so the inverted-index self-join remains (per-doc set sizes ride along
-    as a window column; the join's two sides are canonically identical so
-    Catalyst's ReuseExchange materializes the shuffle once)."""
+    With ``max_df`` set, the cut is :func:`_cut_oversized` and pairs are
+    enumerated by :func:`_bucket_pairs` from per-shingle sorted
+    (id, set_size) arrays, no self-join (r06, interleaved at sf0.1:
+    1.9 → 1.5 s with an identical pair set). Without ``max_df`` buckets
+    are unbounded, so the inverted-index self-join remains (per-doc set
+    sizes ride along as a window column; the join's two sides are
+    canonically identical so Catalyst's ReuseExchange materializes the
+    shuffle once)."""
     sh = shingle_table(df, text_col, id_col, k)
     if max_df is not None:
-        bad = (
-            sh.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("__df"))
-            .where(F.col("__df") > max_df)
-            .select("shingle")
-        )
-        kept = sh.join(bad, "shingle", "left_anti")
+        kept = _cut_oversized(sh, ["shingle"], max_df)
         # post-cut set size per doc (the jaccard denominators), carried on
         # every posting row — bounded window partition (one doc's shingles)
         kept = kept.withColumn(
             "__n_sh", F.count(F.lit(1)).over(Window.partitionBy(id_col))
         )
-        buckets = kept.groupBy("shingle").agg(
-            F.sort_array(
-                F.collect_list(
-                    F.struct(F.col(id_col).alias("i"), F.col("__n_sh").alias("n"))
-                )
-            ).alias("__m")
-        )
-        # posexplode is 0-based; slice() is 1-based → partners of element
-        # __j start at 1-based position __j + 2; ids are unique per bucket
-        # and sorted, so positional pairs are exactly the id_a < id_b pairs
-        p = buckets.select(
-            F.posexplode("__m").alias("__j", "__s"), F.col("__m")
-        ).select(
-            F.col("__s.i").alias("id_a"),
-            F.col("__s.n").alias("__n_a"),
-            F.explode(F.slice("__m", F.col("__j") + 2, max_df)).alias("__s2"),
-        )
-        return (
-            p.select(
-                "id_a",
-                "__n_a",
-                F.col("__s2.i").alias("id_b"),
-                F.col("__s2.n").alias("__n_b"),
-            )
-            .groupBy("id_a", "id_b")
-            .agg(
-                F.count(F.lit(1)).alias("n_inter"),
-                F.min("__n_a").alias("n_a"),
-                F.min("__n_b").alias("n_b"),
-            )
-            .select(
-                "id_a",
-                "id_b",
-                (
-                    F.col("n_inter").cast("double")
-                    / (F.col("n_a") + F.col("n_b") - F.col("n_inter")).cast("double")
-                ).alias("jaccard"),
-            )
-            .where(F.col("jaccard") >= threshold)
+        item = F.struct(F.col(id_col).alias("i"), F.col("__n_sh").alias("n"))
+        return _jaccard(
+            _bucket_pairs(kept, ["shingle"], item, max_df).select(
+                F.col("id_a.i").alias("id_a"),
+                F.col("id_a.n").alias("__n_a"),
+                F.col("id_b.i").alias("id_b"),
+                F.col("id_b.n").alias("__n_b"),
+            ),
+            threshold,
         )
     # uncapped: bucket sizes are unbounded, so the collect-free
-    # inverted-index self-join stays. Set size per doc carried on every row
-    # (pairs then read it with min() — constant within a pair group).
+    # inverted-index self-join stays; set size per doc carried on every row
     sh = sh.withColumn("__n_sh", F.count(F.lit(1)).over(Window.partitionBy(id_col)))
     a = sh.select(F.col(id_col).alias("id_a"), F.col("__n_sh").alias("__n_a"), "shingle")
     b = sh.select(F.col(id_col).alias("id_b"), F.col("__n_sh").alias("__n_b"), "shingle")
-    pairs = (
-        a.join(b, "shingle")
-        .where(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(
-            F.count(F.lit(1)).alias("n_inter"),
-            F.min("__n_a").alias("n_a"),
-            F.min("__n_b").alias("n_b"),
-        )
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.col("n_inter").cast("double")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_inter")).cast("double")
-            ).alias("jaccard"),
-        )
-    )
-    return pairs.where(F.col("jaccard") >= threshold)
+    return _jaccard(a.join(b, "shingle").where(F.col("id_a") < F.col("id_b")), threshold)
 
 
 def near_dedup(

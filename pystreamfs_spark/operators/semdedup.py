@@ -48,7 +48,6 @@ def semantic_dedup(
     vec_col: str = "embedding",
     keep: str = "min_id",
     priority_col: str | None = None,
-    dims: int | None = None,
 ) -> DataFrame:
     """Label every row with its semantic-duplicate group and whether it is
     the group's kept representative. Output: one row per input row —
@@ -101,13 +100,12 @@ def semantic_dedup(
     assigned = (
         df.select(*keep_cols)
         .crossJoin(F.broadcast(cent_row))
-        .withColumn("__nv", norm(vec_col, dims))
+        .withColumn("__nv", norm(vec_col))
         .select(*keep_cols, F.col("__nv"), cell.alias("cell"))
     )
 
     # norm folded ONCE per vector pre-join (cosine_with_norms is
-    # bit-identical to cosine); per-pair work is a single dot — unrolled
-    # into codegen when ``dims`` is given (functions.vectors)
+    # bit-identical to cosine); per-pair work is a single dot
     a = assigned.select(
         F.col(id_col).alias("id_a"),
         F.col(vec_col).alias("__va"),
@@ -126,9 +124,7 @@ def semantic_dedup(
         .select(
             "id_a",
             "id_b",
-            cosine_with_norms(
-                "__va", "__vb", F.col("__na"), F.col("__nb"), dims
-            ).alias("__cos"),
+            cosine_with_norms("__va", "__vb", F.col("__na"), F.col("__nb")).alias("__cos"),
         )
         .where(F.col("__cos") >= F.lit(float(threshold)))
         .select("id_a", "id_b")

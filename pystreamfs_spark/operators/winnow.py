@@ -51,6 +51,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pystreamfs_spark.functions.text import shingles_from_tokens, tokens
+from pystreamfs_spark.operators.dedup import _bucket_pairs, _cut_oversized
 
 
 def _winnow_arrow(w: int):
@@ -251,28 +252,24 @@ def winnow_shared_pairs(
     size). Output: (id_a, id_b, n_shared) with id_a < id_b, each pair once.
 
     ``max_df`` drops fingerprints present in more than that many documents
-    before the self-join — the stop-shingle cut: an agg + join on the
-    fingerprint key, never a collect. At 100 TB the join is equi on ``fp``
-    and AQE-skew-splittable; without a ``max_df`` cut a boilerplate-heavy
-    corpus concentrates pairs under few fps exactly like stop-shingles do
-    in the jaccard index (same remedy, same audit reasoning)."""
+    before pairing — the stop-shingle cut. The capped path is the dedup
+    enumerator (:func:`dedup._cut_oversized` then :func:`dedup._bucket_pairs`):
+    a broadcastable anti-join cut and bounded buckets, no self-join. Without
+    a cut the self-join on ``fp`` stays (equi, AQE-skew-splittable); a
+    boilerplate-heavy corpus then concentrates pairs under few fps exactly
+    like stop-shingles do in the jaccard index (same remedy, same audit
+    reasoning)."""
     if min_shared < 1:
         raise ValueError("min_shared must be >= 1")
     fps = winnow_fingerprints(df, text_col, id_col, k, w).select(id_col, "fp").distinct()
     if max_df is not None:
-        rare = (
-            fps.groupBy("fp")
-            .agg(F.count(F.lit(1)).alias("__df"))
-            .where(F.col("__df") <= max_df)
-            .select("fp")
-        )
-        fps = fps.join(rare, "fp")
-    a = fps.select(F.col(id_col).alias("id_a"), "fp")
-    b = fps.select(F.col(id_col).alias("id_b"), "fp")
+        pairs = _bucket_pairs(_cut_oversized(fps, ["fp"], max_df), ["fp"], F.col(id_col), max_df)
+    else:
+        a = fps.select(F.col(id_col).alias("id_a"), "fp")
+        b = fps.select(F.col(id_col).alias("id_b"), "fp")
+        pairs = a.join(b, "fp").where(F.col("id_a") < F.col("id_b"))
     return (
-        a.join(b, "fp")
-        .where(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
+        pairs.groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .where(F.col("n_shared") >= min_shared)
     )

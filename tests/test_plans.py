@@ -98,14 +98,19 @@ def test_ngram_jaccard_plan_budget(spark, sf_dir):
     normal sizes, graceful SMJ LeftAnti when broadcasting is impossible —
     and pairs enumerate from bounded buckets (no self-join). Budget: ≤ 4
     Generates. The uncapped regime keeps the self-join, whose two sides
-    must still dedupe via ReuseExchange under forced-SMJ."""
-    from pystreamfs_spark.operators.dedup import ngram_jaccard_pairs
+    must still dedupe via ReuseExchange under forced-SMJ. The capped
+    minhash plan shares the enumerator: its only join is the LeftAnti cut,
+    with no self-join on (band, sig)."""
+    from pystreamfs_spark.operators.dedup import minhash_lsh_candidates, ngram_jaccard_pairs
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
     out = ngram_jaccard_pairs(d, k=3, threshold=0.2, max_df=100)
     text = explain_str(out)
     assert len(re.findall(r"^\(\d+\) Generate", text, flags=re.MULTILINE)) <= 4, text[:3000]
     assert "LeftAnti" in text, text[:3000]
+
+    mh = explain_str(minhash_lsh_candidates(d, n_bands=8, k=3, max_bucket_size=30))
+    assert re.findall(r"^Join type: (\w+)", mh, flags=re.MULTILINE) == ["LeftAnti"], mh[:3000]
 
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
