@@ -948,9 +948,11 @@ def q_prequential_ofs(spark, sf_dir):
 
 
 def q_prequential_stream(spark, sf_dir):
-    """Streaming-scan prequential evaluation with a bounded prefix buffer
-    (max_train_rows) — the 100 TB path for accuracy metering; exact parity
-    with the grouped fold at the same cap (tests/test_fold_parity.py)."""
+    """Prequential evaluation with a bounded prefix buffer (max_train_rows)
+    — the 100 TB path for accuracy metering: memory per task stays
+    O(max_train_rows), where q_prequential_ofs's uncapped prefix grows with
+    the conversation. Equal to classify.prequential_accuracy at the same cap
+    (tests/test_fold_parity.py)."""
     from pystreamfs_spark.fold import fold_weights_stream
     from pystreamfs_spark.functions import featurize_turns
 

@@ -281,7 +281,7 @@ def main() -> None:
     # otherwise absorbs ~5-15s of process startup and skews attribution.
     if needs_fold:
         warm = featurize_turns(synthesize_transcripts(spark, n_convs=64, seed=1))
-        fold_weights_stream(warm, kernel="ofs", batch_size=50, num_partitions=max(32, cpus)).count()
+        fold_weights_stream(warm, kernel="ofs", batch_size=50).count()
         # first full read of the featurized cache decompresses the feature
         # columns (count() alone doesn't) — do it once untimed so the first
         # timed fold measures the fold, not cache decompression

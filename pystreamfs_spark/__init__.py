@@ -8,7 +8,8 @@ over tables of multi-turn transcripts:
 - lag/lead, backfill (forward fill), rolling and strict-prefix frames
 - point-in-time (as-of) joins
 - per-entity ordered stateful folds (OFS / FSDS / EFS feature-weight kernels)
-  via ``groupBy(...).applyInPandas`` Arrow UDFs — never per-row Python
+  as one partition scan (``mapInArrow``) over sorted Arrow batches — never
+  per-row Python
 - FSCR + Nogueira stability scores over per-window feature selections
 - prequential (strict-prefix train) evaluation with NumPy classifiers
 - per-partition lineage + metrics, checkpoint/resume ledger
@@ -16,8 +17,8 @@ over tables of multi-turn transcripts:
   Jaccard / embedding-cosine), ANN similarity search, text analysis
 
 Design stance (SURVEY.md §7): declarative DataFrame plans for everything
-stateless so Catalyst/AQE optimize them; Arrow ``applyInPandas`` only for the
-genuinely order-dependent kernel folds.
+stateless so Catalyst/AQE optimize them; Arrow UDFs only for the genuinely
+order-dependent kernel folds.
 """
 
 __version__ = "0.1.0"

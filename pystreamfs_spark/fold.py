@@ -9,27 +9,26 @@ semantics AND the scalability unlock (SURVEY.md §7).
 :class:`WindowLoop` is that loop, written once. It owns the kernel state, the
 window id, the partial-window carry and the prequential prefix buffer. Rows
 go in through :meth:`WindowLoop.feed`, split at any points; the windows it
-emits come out as one Arrow batch. Three physical strategies drive it, with
-identical results:
+emits come out as one Arrow batch. Three callers drive it, with identical
+results:
 
-- :func:`fold_weights` — ``groupBy(conv_id).applyInArrow``: one
-  ``feed(final=True)`` per conversation. Simple; materializes a whole
-  conversation per call.
-- :func:`fold_weights_stream` — ``repartition(conv_id) +
-  sortWithinPartitions + mapInArrow``: a partition-local scan that feeds
-  each entity segment of each Arrow batch and closes the entity at its
-  boundary. Memory is O(arrow batch + kernel state + current window), not
-  O(conversation) — a 10⁹-turn conversation streams through one task.
+- :func:`fold_weights` (also named ``fold_weights_stream``) — the one batch
+  driver: ``repartition(conv_id) + sortWithinPartitions + mapInArrow``, a
+  partition-local scan that feeds each entity segment of each Arrow batch
+  and closes the entity at its boundary. Memory is O(arrow batch + kernel
+  state + current window), not O(conversation) — a 10⁹-turn conversation
+  streams through one task. Prequential accuracy adds the prefix buffer:
+  O(max_train_rows) when capped, O(conversation) for the uncapped prefix.
 - ``streaming.stream_fold`` — ``applyInPandasWithState``: one
   ``feed(final=False)`` per micro-batch, with the loop's kernel state, carry
   and window id kept in GroupState.
+- ``fsds_merge.fold_fsds_fast`` — the FSDS re-fold: its loop starts from a
+  merged prefix sketch and the chunk's first window id.
 
-The FSDS re-fold (``fsds_merge.fold_fsds_fast``) is the fourth caller: its
-loop starts from a merged prefix sketch and the chunk's first window id.
-
-The grouped and scan strategies do exactly one shuffle (hash partition on
-conv_id); everything upstream (featurization) and downstream (stability,
-joins) stays in whole-stage codegen.
+The batch fold does at most one shuffle (hash partition on conv_id), and
+none when the input is already partitioned that way; everything upstream
+(featurization) and downstream (stability, joins) stays in whole-stage
+codegen.
 """
 
 from __future__ import annotations
@@ -269,48 +268,7 @@ def fold_weights(
     batch_size: int = 50,
     num_features: int = 5,
     kernel_kwargs: dict[str, Any] | None = None,
-    with_accuracy: bool = False,
-    max_train_rows: int | None = None,
-    entity_col: str = "conv_id",
-    order_cols: tuple[str, ...] = ("turn_idx", "ts"),
-    features_col: str = "features",
-    label_col: str = "label",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Grouped-map fold: one applyInArrow call per conversation.
-
-    Input must have (entity_col, *order_cols, features array<double>,
-    label double, ts timestamp). Output: one row per (conv_id, window_id)
-    with the post-window weight vector, top-m selection and metrics.
-    ``with_accuracy`` trains on the whole strict prefix, or on its most
-    recent ``max_train_rows`` rows when that is set.
-    """
-    if kernel not in KERNELS:
-        raise ValueError(f"unknown kernel {kernel!r}; available: {sorted(KERNELS)}")
-    kk = dict(kernel_kwargs or {})
-    order = list(order_cols)
-
-    def fold_fn(tbl: pa.Table) -> pa.Table:
-        tbl = tbl.sort_by([(c, "ascending") for c in order])
-        loop = WindowLoop(kernel, batch_size, num_features, kk, features_col, with_accuracy, max_train_rows)
-        loop.ts_type = tbl.schema.field(ts_col).type
-        loop.start(tbl.column(entity_col)[0].as_py())
-        loop.feed(*_arrow_rows(tbl, features_col, label_col, ts_col), final=True)
-        return pa.Table.from_batches([loop.batch()])
-
-    cols = [entity_col, *order, features_col, label_col]
-    if ts_col not in cols:
-        cols.append(ts_col)
-    return df.select(*dict.fromkeys(cols)).groupBy(entity_col).applyInArrow(fold_fn, WEIGHTS_SCHEMA)
-
-
-def fold_weights_stream(
-    df: DataFrame,
-    kernel: str = "ofs",
-    batch_size: int = 50,
-    num_features: int = 5,
-    kernel_kwargs: dict[str, Any] | None = None,
-    num_partitions: int | None = None,
+    *,
     entity_col: str = "conv_id",
     order_cols: tuple[str, ...] = ("turn_idx", "ts"),
     features_col: str = "features",
@@ -321,21 +279,25 @@ def fold_weights_stream(
     max_train_rows: int | None = None,
     materialize: bool = True,
 ) -> DataFrame:
-    """Partition-streaming fold: hash-partition by entity, sort within
-    partitions, then scan Arrow batches carrying the window loop across
-    batch boundaries. Bounded memory per task regardless of conversation
-    length.
+    """The batch fold: hash-partition by entity, sort within partitions,
+    then scan Arrow batches carrying the window loop across batch
+    boundaries.
+
+    Input must have (entity_col, *order_cols, features array<double>,
+    label double, ts timestamp). Output: one row per (entity, window_id)
+    with the post-window weight vector, top-m selection and metrics.
+
+    ``with_accuracy=True`` adds prequential k-NN evaluation trained on the
+    entity's strict prefix: all of it (the reference's semantics), or its
+    most recent ``max_train_rows`` rows when that is set. Memory per task is
+    O(arrow batch + kernel state + current window), plus the prefix buffer
+    when ``with_accuracy`` is set: O(max_train_rows·m) capped, O(entity)
+    uncapped.
 
     ``materialize`` (default True) lazily ``localCheckpoint``s the weights
     output so multi-consumer pipelines (FSCR ⋈ Nogueira) execute the fold
     once — see the return-site note. Pass False to get the raw plan (plan
     inspection, or a caller managing its own persistence).
-
-    ``with_accuracy=True`` adds prequential evaluation with a BOUNDED prefix:
-    ``max_train_rows`` is required and caps the per-entity training buffer to
-    its most recent rows (memory stays O(max_train_rows·m + batch)). The
-    results equal ``fold_weights(with_accuracy=True, max_train_rows=...)``.
-    Use :func:`fold_weights` when the faithful unbounded prefix is required.
 
     ``assume_partitioned=True`` skips the repartition+sort when the caller
     guarantees the input is already partitioned by ``entity_col`` and sorted
@@ -345,12 +307,6 @@ def fold_weights_stream(
     """
     if kernel not in KERNELS:
         raise ValueError(f"unknown kernel {kernel!r}; available: {sorted(KERNELS)}")
-    if with_accuracy and max_train_rows is None:
-        raise ValueError(
-            "fold_weights_stream(with_accuracy=True) requires max_train_rows — "
-            "the streaming scan keeps a bounded prefix buffer; use fold_weights "
-            "for the unbounded faithful prefix"
-        )
     kk = dict(kernel_kwargs or {})
     order = list(order_cols)
     cols = list(dict.fromkeys([entity_col, *order, features_col, label_col, ts_col]))
@@ -369,7 +325,11 @@ def fold_weights_stream(
             conv_col = rb.column(entity_col)
             bounds = [0, rb.num_rows]
             if rb.num_rows > 1:
-                neq = pa_compute.not_equal(conv_col.slice(1), conv_col.slice(0, rb.num_rows - 1))
+                cur, prev = conv_col.slice(1), conv_col.slice(0, rb.num_rows - 1)
+                neq = pa_compute.not_equal(cur, prev)
+                if conv_col.null_count:  # NULL vs id is a boundary, NULL vs NULL is not
+                    null_flip = pa_compute.xor(pa_compute.is_null(cur), pa_compute.is_null(prev))
+                    neq = pa_compute.fill_null(pa_compute.or_kleene(neq, null_flip), False)
                 bounds[1:1] = (np.flatnonzero(neq.to_numpy(zero_copy_only=False)) + 1).tolist()
             for lo, hi in zip(bounds, bounds[1:]):
                 conv = conv_col[lo].as_py()
@@ -386,12 +346,14 @@ def fold_weights_stream(
     # Hash-partition on the entity (NOT range): no sampling pass, better
     # balance across many entities, and — crucially — the exchange is
     # eliminated by Catalyst when the upstream featurization window already
-    # hash-partitioned by the same key. Skewed giant entities are bounded by
-    # the streaming scan's O(batch) memory either way.
+    # hash-partitioned by the same key into the same number of partitions.
+    # The explicit count (REPARTITION_BY_NUM) also keeps AQE from coalescing
+    # the fold's tasks. Skewed giant entities are bounded by the scan's
+    # O(batch) memory either way.
     if assume_partitioned:
         prepared = df.select(*cols)
     else:
-        parts = num_partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
+        parts = df.sparkSession.conf.get("spark.sql.shuffle.partitions")
         prepared = (
             df.select(*cols)
             .repartition(int(parts), entity_col)
@@ -410,3 +372,6 @@ def fold_weights_stream(
     # note) if executor loss must be recoverable mid-query.
     out = prepared.mapInArrow(scan, WEIGHTS_SCHEMA)
     return out.localCheckpoint(eager=False) if materialize else out
+
+
+fold_weights_stream = fold_weights

@@ -6,7 +6,7 @@ reference harness dispatches per window (reference contract:
 /root/reference/pystreamfs/pystreamfs.py:68). Kernels here are written from
 scratch against the papers + the reference's observable semantics; they carry
 explicit, picklable state objects instead of a mutable ``param`` dict and are
-executed inside Arrow ``applyInPandas`` folds (pystreamfs_spark.fold).
+executed inside the Arrow fold scan (pystreamfs_spark.fold).
 """
 
 from pystreamfs_spark.kernels.ofs import OFSState, ofs_update

@@ -1,4 +1,4 @@
-"""Parity: engine folds (both physical strategies) vs the NumPy oracle.
+"""Parity: the engine fold vs the NumPy oracle.
 
 For every synthetic conversation the engine's per-window weight vectors,
 top-m selections and window row-counts must match an independent eager
@@ -10,6 +10,7 @@ sign-invariant, same LAPACK on both sides).
 import numpy as np
 import pytest
 
+from pystreamfs_spark.classify import prequential_accuracy
 from pystreamfs_spark.fold import fold_weights, fold_weights_stream
 from pystreamfs_spark.functions.features import featurize_turns
 from pystreamfs_spark.sources.transcripts import synthesize_transcripts
@@ -49,10 +50,9 @@ def _collect_engine(df):
 
 
 @pytest.mark.parametrize("kernel,kw", [("ofs", {}), ("efs", {}), ("fsds", {"k": 2, "ell": 0})])
-@pytest.mark.parametrize("strategy", [fold_weights, fold_weights_stream])
-def test_fold_matches_oracle(featurized, per_conv_matrices, kernel, kw, strategy):
+def test_fold_matches_oracle(featurized, per_conv_matrices, kernel, kw):
     eng = _collect_engine(
-        strategy(featurized, kernel=kernel, batch_size=BATCH, num_features=NUM_FEATURES, kernel_kwargs=kw)
+        fold_weights(featurized, kernel=kernel, batch_size=BATCH, num_features=NUM_FEATURES, kernel_kwargs=kw)
     )
     assert set(eng) == set(per_conv_matrices)
     for conv_id, (X, y) in per_conv_matrices.items():
@@ -81,7 +81,20 @@ def test_partial_last_window_and_tiny_convs(spark):
     assert got.sort_index().tolist() == sizes.sort_index().tolist()
 
 
-def test_accuracy_parity_ofs(featurized, per_conv_matrices):
+@pytest.fixture
+def tiny_arrow_batches(spark):
+    """Arrow batches of 7 rows: the prefix buffer, the carry and the entity
+    boundaries must all survive batch cuts."""
+    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+
+
+def test_accuracy_parity_ofs(featurized, per_conv_matrices, tiny_arrow_batches):
+    # the uncapped prefix, carried across Arrow batches
     eng = _collect_engine(
         fold_weights(featurized, kernel="ofs", batch_size=BATCH, num_features=NUM_FEATURES, with_accuracy=True)
     )
@@ -130,48 +143,60 @@ def test_knn_argpartition_matches_full_stable_argsort():
         assert a == b, (trial, a, b)
 
 
-def test_stream_accuracy_matches_grouped_capped(spark):
-    """fold_weights_stream(with_accuracy, max_train_rows=M) must equal
-    fold_weights(with_accuracy, max_train_rows=M) exactly — including the
-    t=0 train==test quirk, the capped-prefix training set, and the reported
-    full-prefix train_rows — even across tiny Arrow batch boundaries."""
-    from pystreamfs_spark.fold import fold_weights, fold_weights_stream
-    from pystreamfs_spark.functions.features import featurize_turns
-    from pystreamfs_spark.sources.transcripts import synthesize_transcripts
-
+def test_accuracy_matches_prequential_reference(spark, tiny_arrow_batches):
+    """Prequential accuracy, capped and uncapped, equals
+    classify.prequential_accuracy on each conversation's full arrays —
+    including the t=0 train==test quirk, the capped-prefix training set and
+    the reported full-prefix train_rows. Both public names are one fold,
+    so the uncapped prefix runs on the partition scan too."""
+    assert fold_weights is fold_weights_stream
+    bs, M = 12, 30  # M is smaller than long conversations -> the cap bites
     f = featurize_turns(synthesize_transcripts(spark, n_convs=12, seed=11)).cache()
-    M = 30  # smaller than long conversations -> the cap actually bites
-    grouped = {
-        (r.conv_id, r.window_id): (r.acc, r.train_rows, tuple(r.selected))
-        for r in fold_weights(
-            f, kernel="ofs", batch_size=12, with_accuracy=True, max_train_rows=M
-        ).collect()
-    }
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
+    pdf = f.select("conv_id", "turn_idx", "ts", "features", "label").toPandas()
+    for cap in (M, None):
+        eng = _collect_engine(
+            fold_weights_stream(f, kernel="ofs", batch_size=bs, with_accuracy=True, max_train_rows=cap)
+        )
+        assert set(eng) == set(pdf["conv_id"])
+        for conv_id, g in pdf.groupby("conv_id"):
+            g = g.sort_values(["turn_idx", "ts"])
+            X = np.stack(g["features"].to_numpy()).astype(np.float64)
+            y = g["label"].to_numpy(dtype=np.float64)
+            assert len(eng[conv_id]) == (len(X) + bs - 1) // bs
+            for wid, r in eng[conv_id].items():
+                start, stop = wid * bs, min(wid * bs + bs, len(X))
+                sel = np.array(r.selected)
+                assert r.acc == prequential_accuracy(X, y, start, stop, sel, max_train_rows=cap), (cap, conv_id, wid)
+                assert r.train_rows == (stop - start if start == 0 else start)
+    assert any(r.train_rows > M for v in eng.values() for r in v.values())  # cap exercised
+
+
+def test_null_entity_is_its_own_entity(spark):
+    """A NULL entity id sorted next to a real id in one Arrow batch is a
+    boundary, although NULL != 'a' is NULL in Arrow."""
+    import datetime as dt
+
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [
+        (c, i, t0 + dt.timedelta(seconds=i), [float(i), 1.0, float(i % 3)], float(i % 2))
+        for c in (None, "a")
+        for i in range(6)
+    ]
+    df = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, ts timestamp, features array<double>, label double"
+    )
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")  # both entities in one scan
     try:
-        streamed = {
-            (r.conv_id, r.window_id): (r.acc, r.train_rows, tuple(r.selected))
-            for r in fold_weights_stream(
-                f, kernel="ofs", batch_size=12, with_accuracy=True, max_train_rows=M
-            ).collect()
-        }
+        got = fold_weights_stream(df, kernel="ofs", batch_size=4, num_features=2).collect()
     finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-    assert streamed == grouped
-    assert any(v[1] > M for v in grouped.values())  # cap exercised
-
-
-def test_stream_accuracy_requires_cap(spark):
-    import pytest
-
-    from pystreamfs_spark.fold import fold_weights_stream
-    from pystreamfs_spark.functions.features import featurize_turns
-    from pystreamfs_spark.sources.transcripts import synthesize_transcripts
-
-    f = featurize_turns(synthesize_transcripts(spark, n_convs=2, seed=1))
-    with pytest.raises(ValueError, match="max_train_rows"):
-        fold_weights_stream(f, with_accuracy=True)
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    assert sorted(((r.conv_id, r.window_id, r.win_rows) for r in got), key=str) == [
+        ("a", 0, 4),
+        ("a", 1, 2),
+        (None, 0, 4),
+        (None, 1, 2),
+    ]
 
 
 def test_large_window_scan_path_bit_identical():

@@ -10,7 +10,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from pystreamfs_spark.fold import fold_weights, fold_weights_stream
+from pystreamfs_spark.fold import fold_weights
 
 CSV = "/root/reference/datasets/credit.csv"
 
@@ -43,13 +43,12 @@ def credit_df(spark, credit):
 
 
 @pytest.mark.parametrize("kernel,kw", [("ofs", {}), ("efs", {}), ("fsds", {"k": 2, "ell": 0})])
-@pytest.mark.parametrize("strategy", [fold_weights, fold_weights_stream])
-def test_credit_golden(credit, credit_df, kernel, kw, strategy):
+def test_credit_golden(credit, credit_df, kernel, kw):
     from oracle_ref import simulate
 
     X, y = credit
     ora = simulate(X, y, kernel=kernel, batch_size=50, num_features=5, **kw)
-    eng = {r.window_id: r for r in strategy(credit_df, kernel=kernel, batch_size=50, num_features=5, kernel_kwargs=kw).collect()}
+    eng = {r.window_id: r for r in fold_weights(credit_df, kernel=kernel, batch_size=50, num_features=5, kernel_kwargs=kw).collect()}
     assert len(eng) == len(ora["w"]) == 20  # ceil(965/50)
     for wid in range(len(ora["w"])):
         np.testing.assert_allclose(np.array(eng[wid].w), ora["w"][wid], rtol=1e-9, atol=1e-12)

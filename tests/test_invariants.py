@@ -10,7 +10,7 @@
 import numpy as np
 from pyspark.sql import functions as F
 
-from pystreamfs_spark.fold import fold_weights, fold_weights_stream
+from pystreamfs_spark.fold import fold_weights
 from pystreamfs_spark.functions.features import featurize_turns
 from pystreamfs_spark.sources.transcripts import synthesize_transcripts
 
@@ -57,10 +57,9 @@ def test_no_temporal_leakage(spark):
 def test_order_invariance(spark):
     base = featurize_turns(synthesize_transcripts(spark, n_convs=10, seed=21)).cache()
     shuffled = base.repartition(17, F.pmod(F.xxhash64("text"), F.lit(17))).cache()
-    for strategy in (fold_weights, fold_weights_stream):
-        a = _weights_map(strategy(base, kernel="ofs", batch_size=9))
-        b = _weights_map(strategy(shuffled, kernel="ofs", batch_size=9))
-        assert a == b
+    a = _weights_map(fold_weights(base, kernel="ofs", batch_size=9))
+    b = _weights_map(fold_weights(shuffled, kernel="ofs", batch_size=9))
+    assert a == b
 
 
 def test_per_turn_text_equality_under_stable_ordering(spark):

@@ -54,7 +54,7 @@ def _replay(X, y, batch_size, m):
 
 
 def test_mcnn_fold_matches_replay(spark):
-    from pystreamfs_spark.fold import fold_weights, fold_weights_stream
+    from pystreamfs_spark.fold import fold_weights
     from pystreamfs_spark.functions.features import featurize_turns
     from pystreamfs_spark.sources.transcripts import synthesize_transcripts
 
@@ -67,15 +67,14 @@ def test_mcnn_fold_matches_replay(spark):
             np.stack(g["features"].to_numpy()).astype(np.float64),
             g["label"].to_numpy(dtype=np.float64),
         )
-    for strategy in (fold_weights, fold_weights_stream):
-        eng = {}
-        for r in strategy(f, kernel="mcnn", batch_size=10, num_features=5).collect():
-            eng.setdefault(r.conv_id, {})[r.window_id] = r
-        for conv_id, (X, y) in mats.items():
-            expect = _replay(X, y, 10, X.shape[1])
-            assert len(eng[conv_id]) == len(expect)
-            for wid, w in enumerate(expect):
-                np.testing.assert_allclose(np.array(eng[conv_id][wid].w), w, rtol=1e-9, atol=1e-12)
+    eng = {}
+    for r in fold_weights(f, kernel="mcnn", batch_size=10, num_features=5).collect():
+        eng.setdefault(r.conv_id, {})[r.window_id] = r
+    for conv_id, (X, y) in mats.items():
+        expect = _replay(X, y, 10, X.shape[1])
+        assert len(eng[conv_id]) == len(expect)
+        for wid, w in enumerate(expect):
+            np.testing.assert_allclose(np.array(eng[conv_id][wid].w), w, rtol=1e-9, atol=1e-12)
 
 
 def test_mcnn_drift_and_relevancy_mechanics():

@@ -46,14 +46,14 @@ def test_small_dim_join_broadcasts(spark, sf_dir):
 def test_fold_exchange_budget(spark):
     f = featurize_turns(synthesize_transcripts(spark, n_convs=50, seed=2))
     # pipeline: featurize needs 1 exchange (window on conv_id); the fold's
-    # hash repartition on the same key must be eliminated or amortized —
-    # total exchanges in the whole plan must be exactly 1
+    # hash repartition on the same key, into the same partition count, must
+    # be eliminated — total exchanges in the whole plan must be exactly 1
     # materialize=False: the default lazily checkpoints the output (its
     # plan then reads as one ExistingRDD scan); the raw plan is what this
     # test budgets
     folded = fold_weights_stream(f, kernel="ofs", batch_size=10, materialize=False)
     n = count_exchanges(folded)
-    assert n <= 2, explain_str(folded)[:3000]
+    assert n == 1, explain_str(folded)[:3000]
     # pre-partitioned contract: zero additional exchange beyond featurize's
     folded_pp = fold_weights_stream(
         f, kernel="ofs", batch_size=10, assume_partitioned=True, materialize=False

@@ -77,10 +77,10 @@ def test_bucketed_sorted_table_fold_is_shuffle_free_and_exact(spark, tmp_path):
     """The README/fold contract claim, proven against a real catalog table:
     a table bucketed by conv_id and sorted by (conv_id, turn_idx, ts)
     satisfies assume_partitioned — the fold plan has ZERO exchanges and the
-    weights are bit-identical to the grouped fold. (Single writer task →
+    weights are bit-identical to the default (repartitioning) fold. (Single writer task →
     one file per bucket, so within-bucket sort order survives the read —
     the standard Spark bucketing deployment caveat.)"""
-    from pystreamfs_spark.fold import fold_weights, fold_weights_stream
+    from pystreamfs_spark.fold import fold_weights
     from pystreamfs_spark.functions.features import featurize_turns
     from pystreamfs_spark.plans import count_exchanges, explain_str
 
@@ -98,7 +98,7 @@ def test_bucketed_sorted_table_fold_is_shuffle_free_and_exact(spark, tmp_path):
     )
     try:
         bt = spark.table("bucketed_turns")
-        folded = fold_weights_stream(bt, kernel="ofs", batch_size=10, assume_partitioned=True)
+        folded = fold_weights(bt, kernel="ofs", batch_size=10, assume_partitioned=True)
         assert count_exchanges(folded) == 0, explain_str(folded)[:3000]
         got = {
             (r.conv_id, r.window_id): (list(r.w), list(r.selected)) for r in folded.collect()

@@ -3,8 +3,8 @@
 Without Spark: any split of an entity's rows into feeds emits the same
 windows as one ``final=True`` feed; ``final=False`` keeps the short tail in
 the carry; prequential accuracy equals ``classify.prequential_accuracy`` on
-the full arrays. With Spark: both fold strategies reject ragged and null
-``features`` with the same error, and report a real memory figure.
+the full arrays. With Spark: the fold rejects ragged and null ``features``
+with the same error as the conversion, and reports a real memory figure.
 """
 
 import re
@@ -129,19 +129,16 @@ def _turns(spark, feats):
     ],
 )
 def test_malformed_features_same_error_on_both_strategies(spark, feats, message):
-    from pystreamfs_spark.fold import fold_weights, fold_weights_stream
+    from pystreamfs_spark.fold import fold_weights
 
-    df = _turns(spark, feats)
-    for strategy in (fold_weights, fold_weights_stream):
-        with pytest.raises(Exception, match=re.escape(message)):
-            strategy(df, kernel="ofs", batch_size=2, num_features=2).collect()
+    with pytest.raises(Exception, match=re.escape(message)):
+        fold_weights(_turns(spark, feats), kernel="ofs", batch_size=2, num_features=2).collect()
 
 
 def test_mem_bytes_is_a_real_figure(spark):
-    from pystreamfs_spark.fold import fold_weights, fold_weights_stream
+    from pystreamfs_spark.fold import fold_weights
 
     df = _turns(spark, [[float(i), 1.0, 0.5] for i in range(5)])
-    for strategy in (fold_weights, fold_weights_stream):
-        rows = strategy(df, kernel="ofs", batch_size=2, num_features=2).collect()
-        assert len(rows) == 3
-        assert all(r.mem_bytes > 0 for r in rows), strategy.__name__
+    rows = fold_weights(df, kernel="ofs", batch_size=2, num_features=2).collect()
+    assert len(rows) == 3
+    assert all(r.mem_bytes > 0 for r in rows)
