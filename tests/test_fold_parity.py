@@ -11,6 +11,7 @@ import numpy as np
 import pytest
 
 from pystreamfs_spark.classify import prequential_accuracy
+from pystreamfs_spark import fold
 from pystreamfs_spark.fold import fold_weights, fold_weights_stream
 from pystreamfs_spark.functions.features import featurize_turns
 from pystreamfs_spark.sources.transcripts import synthesize_transcripts
@@ -50,9 +51,11 @@ def _collect_engine(df):
 
 
 @pytest.mark.parametrize("kernel,kw", [("ofs", {}), ("efs", {}), ("fsds", {"k": 2, "ell": 0})])
-def test_fold_matches_oracle(featurized, per_conv_matrices, kernel, kw):
+@pytest.mark.parametrize("entry", ["fold_weights", "fold_weights_stream"])
+def test_fold_matches_oracle(featurized, per_conv_matrices, kernel, kw, entry):
+    # both public names of the fold must match the oracle
     eng = _collect_engine(
-        fold_weights(featurized, kernel=kernel, batch_size=BATCH, num_features=NUM_FEATURES, kernel_kwargs=kw)
+        getattr(fold, entry)(featurized, kernel=kernel, batch_size=BATCH, num_features=NUM_FEATURES, kernel_kwargs=kw)
     )
     assert set(eng) == set(per_conv_matrices)
     for conv_id, (X, y) in per_conv_matrices.items():
