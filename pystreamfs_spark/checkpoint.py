@@ -67,7 +67,7 @@ def metrics_rows(weights: DataFrame) -> DataFrame:
         F.avg("elapsed_sec").alias("kernel_sec_avg"),
         F.sum("elapsed_sec").alias("kernel_sec_total"),
         F.avg("acc").alias("acc_avg"),
-        F.avg(F.when(F.col("mem_bytes") >= 0, F.col("mem_bytes"))).alias("mem_bytes_avg"),
+        F.avg("mem_bytes").alias("mem_bytes_avg"),
         F.expr("percentile(acc, 0.25)").alias("acc_q1"),
         F.expr("percentile(acc, 0.75)").alias("acc_q3"),
     )

@@ -16,6 +16,10 @@ parallelism INSIDE one giant conversation at the cost of exactness:
       sketch of all PRIOR chunks and the chunk's first window id →
       per-window weight vectors at full granularity.
 
+  Phases A and B both run the kernel's Frequent-Directions step
+  (``kernels.fsds.fd_step``): A feeds it a window's transposed rows, B a
+  chunk's sketch. Neither needs the kernel's ridge/weights tail.
+
 Exactness: with a single chunk the prefix is empty and the result is
 bit-identical to the exact fold (tested); with multiple chunks, per-window
 weights are approximate because the prefix is a merged sketch rather than
@@ -45,7 +49,7 @@ from pyspark.sql.types import (
 )
 
 from pystreamfs_spark.fold import WindowLoop, feature_matrix
-from pystreamfs_spark.kernels.fsds import FSDSState
+from pystreamfs_spark.kernels.fsds import FSDSState, fd_step
 from pystreamfs_spark.operators.windows import assign_count_windows
 
 _SKETCH_SCHEMA = StructType(
@@ -73,22 +77,6 @@ _OUT_SCHEMA = StructType(
         StructField("selected", ArrayType(IntegerType())),
     ]
 )
-
-
-def _fd_step(B: np.ndarray | None, C_new: np.ndarray, ell: int) -> np.ndarray:
-    """One Frequent-Directions step: append the columns ``C_new`` to sketch
-    ``B`` (hstack), SVD, keep the top ℓ, shrink. Phase A feeds it a window's
-    transposed rows; phase B feeds it a chunk's sketch (the FD merge). It
-    skips the kernel's ridge/weights tail, which phase A does not need and
-    which indexes s[k−1] on degenerate (few-column) windows."""
-    C = C_new if B is None or B.size == 0 else np.hstack((B, C_new))
-    U, s, _ = np.linalg.svd(C, full_matrices=False)
-    U = U[:, :ell]
-    s = s[:ell]
-    with np.errstate(invalid="ignore"):
-        s = np.sqrt(s**2 - s[-1] ** 2)
-    s = np.nan_to_num(s)
-    return np.dot(U, np.diag(s))
 
 
 def fold_fsds_fast(
@@ -129,7 +117,7 @@ def fold_fsds_fast(
         X = feature_matrix(tbl.column(features_col), features_col)
         B = None
         for s in range(0, len(X), batch_size):
-            B = _fd_step(B, X[s : s + batch_size].T, resolved_ell)
+            _, _, B = fd_step(B, X[s : s + batch_size].T, resolved_ell)
         return pa.table(
             {
                 "conv_id": [str(tbl.column(entity_col)[0].as_py())],
@@ -147,7 +135,7 @@ def fold_fsds_fast(
         for _, row in pdf.iterrows():
             out.append((row["conv_id"], int(row["chunk"]), pickle.dumps(prefix)))
             B = pickle.loads(row["sketch"])
-            prefix = _fd_step(prefix, B, resolved_ell)
+            _, _, prefix = fd_step(prefix, B, resolved_ell)
         return pd.DataFrame(out, columns=["conv_id", "chunk", "prefix"])
 
     prefixes = sketches.groupBy("conv_id").applyInPandas(prefix_scan, _PREFIX_SCHEMA)

@@ -43,55 +43,25 @@ class EFSState:
         return cls(u=np.ones(m, dtype=np.float64) * 2, v=np.ones(m, dtype=np.float64))
 
 
-def _minmax_row(x: np.ndarray) -> np.ndarray:
-    # sklearn MinMaxScaler on a single column-vector: X*scale_ + min_
-    # with scale_ = 1/range (range 0 → 1) and min_ = -min(x)*scale_.
-    mn = x.min()
-    rng = x.max() - mn
-    scale = 1.0 / (rng if rng != 0 else 1.0)
-    return x * scale + (0.0 - mn * scale)
-
-
 def _minmax_rows(X: np.ndarray) -> np.ndarray:
-    """Row-wise :func:`_minmax_row`, vectorized. min/max are exact and the
-    scale/shift are the same elementwise IEEE ops, so each output row is
-    bit-identical to ``_minmax_row(X[i])``."""
+    """sklearn's MinMaxScaler applied to each row on its own, vectorized:
+    ``x*scale_ + min_`` with scale_ = 1/range (range 0 → 1) and
+    min_ = -min(x)*scale_. min/max are exact and the scale/shift are the
+    same elementwise IEEE ops, so each row is bit-identical to scaling it
+    alone."""
     mn = X.min(axis=1)
     rng = X.max(axis=1) - mn
     scale = 1.0 / np.where(rng != 0, rng, 1.0)
     return X * scale[:, None] + (0.0 - mn * scale)[:, None]
 
 
-# growing-chunk scan (see kernels/ofs.py): small after each event, grows
-# geometrically through quiet stretches
-_SCAN_CHUNK0 = 64
-_SCAN_CHUNK_MAX = 8192
-# Below this window size the chunked scan cannot amortize its per-scan
-# NumPy-call overhead (~6 ops) against ~2µs/row scalar dots — measured
-# ~0.9× at n=50 vs 1.2-1.3× at n=1000+ — so small windows take the
-# reference per-row path directly.
-_VECTOR_MIN_ROWS = 256
-
-
 def efs_update(state: EFSState, X: np.ndarray, y: np.ndarray) -> tuple[EFSState, np.ndarray]:
     """Fold one window (rows in order) through the Modified Balanced Winnow.
 
-    Margin-event decomposition (VERDICT r02 #6), ADAPTIVE: (u, v) are
-    constant between margin mistakes, so the next mistake is found with two
-    vectorized matvecs over a chunk of remaining (pre-normalized) rows; on
-    high-mistake streams each chunk scan measures candidate density and
-    falls back to the per-row loop for the rest of the window when density
-    > 30% (the rescan matvecs would be pure overhead); windows smaller than
-    _VECTOR_MIN_ROWS take the per-row path directly. The matvec only
-    pre-filters rows safely above the margin (score·y > M + B where B is
-    the rigorous forward-error bound built from the absolute-value dots —
-    valid for any summation order, covering BLAS-vs-scalar gaps under
-    cancellation; non-finite scores stay
-    candidates); every candidate is re-decided with the reference's scalar
-    ``np.dot(x, u) - np.dot(x, v) - threshold`` under the then-current
-    (u, v), and the per-event update is unchanged — the (u, v) trajectory
-    is bit-identical to the per-row loop. Row-wise min-max normalization is
-    precomputed vectorized for the whole window in both modes
+    The body is the reference's per-row loop: scalar score
+    ``np.dot(x, u) - np.dot(x, v) - threshold`` on the min-max normalized
+    row, and a multiplicative promote/demote on each margin mistake. The
+    row-wise normalization is precomputed for the whole window
     (bit-identical elementwise ops — see :func:`_minmax_rows`).
 
     Note: on adversarial (~1e308) inputs the multiplicative update itself
@@ -103,58 +73,16 @@ def efs_update(state: EFSState, X: np.ndarray, y: np.ndarray) -> tuple[EFSState,
     n = X.shape[0]
     with np.errstate(over="ignore", invalid="ignore"):
         Xn = _minmax_rows(X) if n else X
-        yy_all = np.where(np.asarray(y) == 0, -1.0, 1.0)
-        i = 0
-        dense = n < _VECTOR_MIN_ROWS
-        chunk = _SCAN_CHUNK0
-        while i < n:
-            if dense:
-                for r in range(i, n):
-                    x = Xn[r]
-                    yy = -1.0 if y[r] == 0 else 1.0
-                    score = np.dot(x, u) - np.dot(x, v) - state.threshold
-                    if score * yy <= state.M:
-                        if yy > 0:
-                            u = u * state.alpha * (1 + x)
-                            v = v * state.beta * (1 - x)
-                        else:
-                            u = u * state.beta * (1 - x)
-                            v = v * state.alpha * (1 + x)
-                break
-            seg_stop = min(n, i + chunk)
-            seg = Xn[i:seg_stop]
-            t = (seg @ u - seg @ v - state.threshold) * yy_all[i:seg_stop]
-            # rigorous pre-filter band (see kernels/ofs.py): each dot's
-            # gemv-vs-scalar gap is ≤ γ_m·Σ|xᵢuᵢ| (any summation order), and
-            # the score's subtractions add eps-relative terms — catastrophic
-            # cancellation between ⟨x,u⟩ and ⟨x,v⟩ is exactly where a
-            # relative-in-t band under-covers, so the bound is built from the
-            # ABSOLUTE-value dots. Factor 4 slack; NaN stays a candidate.
-            absseg = np.abs(seg)
-            band = (4.0 * Xn.shape[1] * np.finfo(np.float64).eps) * (
-                absseg @ np.abs(u) + absseg @ np.abs(v)
-            ) + 4.0 * np.finfo(np.float64).eps * (np.abs(t) + abs(state.threshold))
-            idxs = np.flatnonzero(~(t > state.M + band))
-            dense = idxs.size > 0.3 * (seg_stop - i)
-            advanced = False
-            for j in idxs:
-                r = i + j
-                x = Xn[r]
-                yy = -1.0 if y[r] == 0 else 1.0
-                score = np.dot(x, u) - np.dot(x, v) - state.threshold
-                if score * yy <= state.M:  # the reference's exact decision
-                    if yy > 0:
-                        u = u * state.alpha * (1 + x)
-                        v = v * state.beta * (1 - x)
-                    else:
-                        u = u * state.beta * (1 - x)
-                        v = v * state.alpha * (1 + x)
-                    i = r + 1
-                    advanced = True
-                    chunk = _SCAN_CHUNK0
-                    break
-            if not advanced:
-                i = seg_stop
-                chunk = min(chunk * 4, _SCAN_CHUNK_MAX)
+        for r in range(n):
+            x = Xn[r]
+            yy = -1.0 if y[r] == 0 else 1.0
+            score = np.dot(x, u) - np.dot(x, v) - state.threshold
+            if score * yy <= state.M:
+                if yy > 0:
+                    u = u * state.alpha * (1 + x)
+                    v = v * state.beta * (1 - x)
+                else:
+                    u = u * state.beta * (1 - x)
+                    v = v * state.alpha * (1 + x)
     w = np.abs(u - v)
     return EFSState(u=u, v=v, alpha=state.alpha, beta=state.beta, threshold=state.threshold, M=state.M), w

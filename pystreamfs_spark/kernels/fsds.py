@@ -7,19 +7,22 @@ Semantics matched to the reference harness kernel
 per window (batch of n rows × m features):
   1. work on the transpose Yt (features as rows)
   2. sketch size ℓ defaults to ⌈√m⌉ (int(√m)) when unset
-  3. first window seeds the sketch: B := Yt[:, :ℓ]; C := Yt
-     subsequent windows: C := [B | Yt]  (m × (ℓ+n))
+  3. first window: C := Yt; subsequent windows: C := [B | Yt]  (m × (ℓ+n))
   4. thin SVD of C; retain top-ℓ singular triplets
   5. Frequent-Directions shrink: s ← √(s² − s_ℓ²)  (NaNs → 0, a deliberate
      small-batch guard the reference added, fsds.py:50-52)
   6. B ← U·diag(s)
   7. ridge regularizer α = 2³·s_k (paper §5.1 pre-experiment setting)
-  8. D = diag(s_k / (s_k² + α)) over the top-k values (NaNs → 0 guard)
+  8. D = diag(s_k / (s_k² + α)) over the top-k values (NaNs → 0 guard);
+     when C has fewer than k singular values (e.g. a one-row first window)
+     the missing ones count as 0 (the reference raises IndexError there)
   9. feature weights w = rowmax |U[:, :k] · D|
 
 w is sign-invariant by construction (|·| of U columns), so SVD sign ambiguity
 does not affect selections; parity tests compare w directly (same BLAS).
-State carried across windows: the m×ℓ sketch B (and resolved ℓ).
+State carried across windows: the m×ℓ sketch B (and resolved ℓ). Steps 3-6
+are :func:`fd_step`, which ``fsds_merge`` also uses to sketch and merge
+chunks.
 """
 
 from __future__ import annotations
@@ -53,30 +56,34 @@ class FSDSState:
         return cls(B=None, ell=ell, k=k, m=m)
 
 
+def fd_step(B: np.ndarray | None, C_new: np.ndarray, ell: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """One Frequent-Directions step (Liberty 2013): append the columns
+    ``C_new`` to sketch ``B`` (none before the first window), thin SVD, keep
+    the top ℓ, shrink. Returns ``(U, s, B')`` with ``B' = U·diag(s)``; ``s``
+    holds min(ℓ, *C.shape) values."""
+    C = C_new if B is None or B.size == 0 else np.hstack((B, C_new))
+    U, s, _ = np.linalg.svd(C, full_matrices=False)
+    U = U[:, :ell]
+    s = s[:ell]
+    with np.errstate(invalid="ignore"):
+        s = np.sqrt(s**2 - s[-1] ** 2)
+    s = np.nan_to_num(s)
+    return U, s, np.dot(U, np.diag(s))
+
+
 def fsds_update(state: FSDSState, X: np.ndarray, y: np.ndarray | None = None) -> tuple[FSDSState, np.ndarray]:
     """Fold one window through the FSDS sketch update; returns (state, w)."""
     del y  # unsupervised
     Yt = X.T.astype(np.float64, copy=False)
     ell = state.ell if state.ell >= 1 else int(np.sqrt(state.m))
     k = state.k
+    U, s, B = fd_step(state.B, Yt, ell)
 
-    if state.B is None or state.B.size == 0:
-        # seeding window: B is the first ell columns, C is all of Yt
-        C = np.hstack((Yt[:, :ell], Yt[:, ell:]))
-    else:
-        C = np.hstack((state.B, Yt))
-
-    U, s, _ = np.linalg.svd(C, full_matrices=False)
-    U = U[:, :ell]
-    s = s[:ell]
-
-    delta = s[-1] ** 2
-    with np.errstate(invalid="ignore"):
-        s = np.sqrt(s**2 - delta)
-    s = np.nan_to_num(s)
-
-    B = np.dot(U, np.diag(s))
-
+    if s.size < k:
+        # the reference raises IndexError here; the missing values are 0
+        pad = k - s.size
+        s = np.pad(s, (0, pad))
+        U = np.pad(U, ((0, 0), (0, pad)))
     alpha = (2**3) * s[k - 1]
     with np.errstate(divide="ignore", invalid="ignore"):
         D = np.diag(s[:k] / (s[:k] ** 2 + alpha))

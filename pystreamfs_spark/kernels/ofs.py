@@ -48,104 +48,28 @@ def _truncate_top(w: np.ndarray, keep: int) -> np.ndarray:
     return w
 
 
-# Margin-event scan chunking: start small after every event (the margins
-# computed before the event are stale once w changes) and grow
-# geometrically through quiet stretches, so scan cost per event is O(small)
-# and scan cost per quiet row is O(1/amortized-chunk) — never the
-# O(events × window) of a fixed full-window rescan.
-_SCAN_CHUNK0 = 64
-_SCAN_CHUNK_MAX = 8192
-# Below this window size the chunked scan cannot amortize its per-scan
-# NumPy-call overhead (~6 ops) against ~2µs/row scalar dots — measured
-# ~0.9× at n=50 vs 1.2-1.3× at n=1000+ — so small windows take the
-# reference per-row path directly.
-_VECTOR_MIN_ROWS = 256
-
-
 def ofs_update(state: OFSState, X: np.ndarray, y: np.ndarray) -> tuple[OFSState, np.ndarray]:
     """Fold one window (rows of X in order) through the OFS update.
 
-    Returns (new_state, w) where w is the post-window weight vector.
-
-    Margin-event decomposition (VERDICT r02 #6), ADAPTIVE: between margin
-    violations ``w`` is constant, so the next violating row can be found
-    with ONE vectorized matvec over a chunk of remaining rows instead of a
-    Python-loop scalar dot per row — a big win on low-violation streams.
-    On HIGH-violation streams (measured 86% on the transcripts workload)
-    the rescan-after-every-event matvec is pure overhead, so each chunk
-    scan measures its candidate density and falls back to the reference's
-    per-row loop for the rest of the window when density > 30%; windows
-    smaller than _VECTOR_MIN_ROWS take the per-row path directly (measured:
-    the scan wins 1.2-1.3× only from ~1000-row windows up, and costs ~10%
-    below ~100 rows).
-
-    Decisions stay EXACTLY the reference's either way: the matvec only
-    *pre-filters* rows that are safely non-violating (margin above 1 + B
-    where B is the rigorous forward-error bound 4·m·eps·Σ|wᵢxᵢ| — valid
-    for ANY summation order, so it covers the BLAS-vs-scalar gap even
-    under catastrophic cancellation — and any non-finite margin stays a
-    candidate); every candidate row is re-decided
-    with the reference's own scalar ``np.dot(w, x) <= 1.0`` under the
-    then-current w, and the update arithmetic per event is unchanged — so
-    the weight trajectory is bit-identical to the per-row loop (asserted by
-    the parity suite and the golden fixture).
+    Returns (new_state, w) where w is the post-window weight vector. The
+    body is the reference's per-row loop: margin test with a scalar
+    ``np.dot(w, x)``, then step, projection and truncation on each margin
+    violation.
     """
     w = state.w.astype(np.float64, copy=True)
     keep = state.num_features
     sqrt_lamb = math.sqrt(LAMB)
-    n = X.shape[0]
-    yy_all = np.where(np.asarray(y) == 0, -1.0, 1.0)
-    i = 0
-    dense = n < _VECTOR_MIN_ROWS
-    # errstate hoisted OUT of the loops: the arithmetic is identical.
     # nrm == 0 → 1/0 → inf → min picks 1.0 (matches reference, which relies
-    # on NumPy scalar division returning inf, warnings off). over/invalid
-    # are ignored only to silence the vectorized pre-filter on adversarial
-    # (±1e308) property-test rows — values are unaffected.
-    chunk = _SCAN_CHUNK0
+    # on NumPy scalar division returning inf, warnings off); over/invalid
+    # stay silent on adversarial (±1e308) property-test rows.
     with np.errstate(divide="ignore", over="ignore", invalid="ignore"):
-        while i < n:
-            if dense:
-                # reference per-row loop for the remainder of the window
-                for r in range(i, n):
-                    x = X[r]
-                    yy = -1.0 if y[r] == 0 else 1.0
-                    if yy * np.dot(w, x) <= 1.0:
-                        w = w + ETA * yy * x
-                        nrm = np.linalg.norm(w)
-                        scale = min(1.0, 1.0 / (sqrt_lamb * nrm))
-                        w = w * scale
-                        w = _truncate_top(w, keep)
-                break
-            seg_stop = min(n, i + chunk)
-            seg = X[i:seg_stop]
-            t = yy_all[i:seg_stop] * (seg @ w)
-            # safely non-violating ⇔ t > 1 + B with B the RIGOROUS dot-product
-            # forward-error bound: for any summation order (BLAS gemv blocked
-            # sums included), |fl(Σ wᵢxᵢ) − Σ wᵢxᵢ| ≤ γ_m·Σ|wᵢxᵢ| with
-            # γ_m ≈ m·eps — so gemv and the reference's scalar dot can differ
-            # by at most 2γ_m·Σ|wᵢxᵢ| even under catastrophic cancellation
-            # (a relative-in-t band misses exactly that case). Factor 4 for
-            # slack; NaN compares False → stays a candidate.
-            band = (4.0 * X.shape[1] * np.finfo(np.float64).eps) * (np.abs(seg) @ np.abs(w))
-            idxs = np.flatnonzero(~(t > 1.0 + band))
-            dense = idxs.size > 0.3 * (seg_stop - i)
-            advanced = False
-            for j in idxs:
-                r = i + j
-                x = X[r]
-                yy = -1.0 if y[r] == 0 else 1.0
-                if yy * np.dot(w, x) <= 1.0:  # the reference's exact decision
-                    w = w + ETA * yy * x
-                    nrm = np.linalg.norm(w)
-                    scale = min(1.0, 1.0 / (sqrt_lamb * nrm))
-                    w = w * scale
-                    w = _truncate_top(w, keep)
-                    i = r + 1
-                    advanced = True
-                    chunk = _SCAN_CHUNK0  # margins ahead are stale; restart small
-                    break
-            if not advanced:
-                i = seg_stop  # no violation in this chunk; w unchanged
-                chunk = min(chunk * 4, _SCAN_CHUNK_MAX)
+        for r in range(X.shape[0]):
+            x = X[r]
+            yy = -1.0 if y[r] == 0 else 1.0
+            if yy * np.dot(w, x) <= 1.0:
+                w = w + ETA * yy * x
+                nrm = np.linalg.norm(w)
+                scale = min(1.0, 1.0 / (sqrt_lamb * nrm))
+                w = w * scale
+                w = _truncate_top(w, keep)
     return OFSState(w=w, num_features=keep), w.copy()

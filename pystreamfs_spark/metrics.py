@@ -27,7 +27,7 @@ def plot_series(weights: DataFrame, num_features: int = 5) -> DataFrame:
         "conv_id",
         "window_id",
         (F.col("elapsed_sec") * 1000.0).alias("time_ms"),
-        F.when(F.col("mem_bytes") >= 0, F.col("mem_bytes") / 1000.0).alias("mem_kb"),
+        (F.col("mem_bytes") / 1000.0).alias("mem_kb"),
         (F.col("acc") * 100.0).alias("acc_pct"),
         F.col("fscr"),
         F.col("selected"),
@@ -38,7 +38,7 @@ def run_summary(weights: DataFrame, num_features: int = 5) -> DataFrame:
     w = _fscr(weights, num_features)
     return w.agg(
         (F.avg("elapsed_sec") * 1000.0).alias("time_avg_ms"),
-        (F.avg(F.when(F.col("mem_bytes") >= 0, F.col("mem_bytes"))) / 1000.0).alias("mem_avg_kb"),
+        (F.avg("mem_bytes") / 1000.0).alias("mem_avg_kb"),
         (F.avg("acc") * 100.0).alias("acc_avg_pct"),
         (F.expr("percentile(acc, 0.25)") * 100.0).alias("acc_q1_pct"),
         (F.expr("percentile(acc, 0.75)") * 100.0).alias("acc_q3_pct"),

@@ -202,19 +202,40 @@ def test_null_entity_is_its_own_entity(spark):
     ]
 
 
+def test_fsds_one_turn_conversation(featurized, per_conv_matrices):
+    """A one-turn conversation has fewer rows than k in its only window; it
+    must fold to w = 0 without failing the job, and every other
+    conversation must still match the oracle."""
+    short = sorted(per_conv_matrices)[0]
+    first = featurized.where(featurized.conv_id == short).agg({"turn_idx": "min"}).first()[0]
+    df = featurized.where((featurized.conv_id != short) | (featurized.turn_idx == first))
+    eng = _collect_engine(
+        fold_weights(df, kernel="fsds", batch_size=BATCH, num_features=NUM_FEATURES, kernel_kwargs={"k": 2})
+    )
+    assert set(eng) == set(per_conv_matrices)
+    assert list(eng[short]) == [0] and eng[short][0].win_rows == 1
+    assert np.array_equal(np.array(eng[short][0].w), np.zeros(len(eng[short][0].w)))
+    for conv_id, (X, y) in per_conv_matrices.items():
+        if conv_id == short:
+            continue
+        ora = simulate(X, y, kernel="fsds", batch_size=BATCH, num_features=NUM_FEATURES, k=2)
+        assert len(eng[conv_id]) == len(ora["w"])
+        for wid, w in enumerate(ora["w"]):
+            np.testing.assert_allclose(np.array(eng[conv_id][wid].w), w, rtol=1e-9, atol=1e-12)
+
+
 def test_large_window_scan_path_bit_identical():
-    """The margin-event chunked-scan path (engaged only for windows >=
-    kernels.ofs._VECTOR_MIN_ROWS) must produce the EXACT reference weight
-    trajectory — sparse (separable) and dense (noisy) violation regimes."""
+    """One 4 000-row window through the per-row OFS/EFS loops must give the
+    EXACT reference weight trajectory — sparse (separable) and dense (noisy)
+    violation regimes."""
     import numpy as np
 
     from oracle_ref import efs_window, ofs_window
     from pystreamfs_spark.kernels.efs import EFSState, efs_update
-    from pystreamfs_spark.kernels.ofs import _VECTOR_MIN_ROWS, OFSState, ofs_update
+    from pystreamfs_spark.kernels.ofs import OFSState, ofs_update
 
     rng = np.random.default_rng(123)
     m, n = 16, 4000
-    assert n >= _VECTOR_MIN_ROWS
     tw = np.zeros(m)
     tw[:5] = 8.0
     scenarios = {
@@ -238,19 +259,18 @@ def test_large_window_scan_path_bit_identical():
 
 
 def test_scan_path_bit_identical_under_cancellation():
-    """Adversarial regime for the pre-filter band (code-review r03): huge
-    feature magnitudes where <w,x> suffers catastrophic cancellation, so a
-    relative-in-t band would misclassify near-margin rows as safe. The
-    rigorous absolute-dot bound must keep the trajectory bit-identical."""
+    """Huge feature magnitudes where <w,x> suffers catastrophic
+    cancellation, so the margin decisions sit near the float noise: the
+    per-row OFS/EFS loops must still follow the reference bit for bit over
+    one 3 000-row window."""
     import numpy as np
 
     from oracle_ref import efs_window, ofs_window
     from pystreamfs_spark.kernels.efs import EFSState, efs_update
-    from pystreamfs_spark.kernels.ofs import _VECTOR_MIN_ROWS, OFSState, ofs_update
+    from pystreamfs_spark.kernels.ofs import OFSState, ofs_update
 
     rng = np.random.default_rng(77)
     m, n = 16, 3000
-    assert n >= _VECTOR_MIN_ROWS
     # paired ±huge columns: products ~1e8 cancel to O(1..1e3) margins
     base = rng.normal(size=(n, m // 2)) * 1e4
     X = np.concatenate([base, -base + rng.normal(size=(n, m // 2))], axis=1)

@@ -100,6 +100,18 @@ def test_fsds_rejects_ell_below_k():
         FSDSState.init(2, k=2)  # sqrt(2) → ell=1 < k
 
 
+def test_fsds_first_window_below_k_rows():
+    """A one-row first window has one singular value (k=2 needs two): the
+    missing one counts as 0, so w is 0 and the sketch keeps one column; the
+    next window chains off it."""
+    st_, w = fsds_update(FSDSState.init(16, k=2), np.arange(16.0)[None, :])
+    assert np.array_equal(w, np.zeros(16))
+    assert st_.B.shape == (16, 1)
+    st_, w = fsds_update(st_, np.arange(16.0)[None, :] * 2)
+    assert st_.B.shape == (16, 2)
+    assert np.all(np.isfinite(w)) and np.all(w >= 0)
+
+
 @settings(max_examples=10, deadline=None)
 @given(st.integers(0, 3))
 def test_kernel_registry_roundtrip(seed):
